@@ -1,141 +1,83 @@
-"""Generic STREAMING CEP: compile any batch ``Pattern`` spec
-(operators/cep.py) into an incremental keyed-state automaton —
-round 12, VERDICT r11 directive 1.
+"""Streaming CEP: the ``operators/cep.py`` patterns detected
+incrementally with keyed state and event-time timers.
 
-Flink analogue: CEP's event-time NFA ([FLINK-API] public surface per
-SURVEY §0 — the reference snapshot is empty), which detects a pattern
-INCREMENTALLY with keyed state. Spark has no built-in operator for
-this (window functions are unsupported on streams), so the automaton
-runs in ``applyInPandasWithState``. Round 11 shipped ONE hardwired
-automaton for ``V+ C{1,3} P+``; this module replaces it with a
-compiler driven by the same Step/Pattern structures the batch
-strategies use, so the watermark-buffered fold works for any
-greedy-strategy pattern — alternation included (the canonical
-relabeling is a row-local expression, applied to the stream exactly
-as to a batch relation).
+Flink analogue: CEP's event-time NFA, which keeps each key's partial
+matches in keyed state and resolves them as the watermark advances.
+Spark has no such operator (window functions are unsupported on
+streams), so every machine here runs in ``applyInPandasWithState``
+through the keyed-state runtime in ``streams.py``.
 
-How the compiled automaton works (per key):
+Runtime contract (:func:`streams.keyed_handler`, launched by
+:func:`streams.run_keyed`):
 
-- **Watermark buffer** (unchanged from the round-11 handler —
-  Flink CEP's buffering rule): arriving events are appended to a
-  per-key buffer; only events the watermark has passed fold into the
-  run structure, in full (ts, order_id) event-time order ACROSS
-  batches. An event-time timer at the earliest held event (−1 ms)
-  re-folds once a later batch advances the watermark. The residual
-  hazard is an exact-millisecond tie across batches (Spark's drop
-  contract is ``ts < wm`` while the fold admits ``ts_ms <= wm_ms``)
-  — pinned by tests/test_streaming_parity.py::
-  test_pattern_stream_exact_watermark_tie_folds_in_arrival_order.
-- **Run window**: the last ``len(steps) − 1`` CLOSED maximal runs
-  (class, length, start) plus the current open run — the streaming
-  image of the batch greedy strategy's runs relation restricted to
-  the lag frame it actually reads. NULL classes form their own runs
-  (cur_len, not cur_cls, is the open-run flag).
-- **Candidacy at anchor-run open**: when a run of the FINAL step's
-  class opens, the closed-run window is checked against
-  ``steps[:-1]`` (class equality, min ≤ len ≤ max) and the within
-  bound — all fixed from that instant, because strict contiguity
-  means nothing can extend a closed run. The candidate emits once
-  the anchor run reaches ``min_count`` folded events (immediately at
-  open for the common ``min_count=1``); the watermark has necessarily
-  passed that event, which is the same emission boundary the oracle's
-  closed-before-final-watermark filter encodes.
+- A machine supplies one step ``process(key, st, events, wm_ms) ->
+  (rows, timer_ms)`` plus its state and output structs. Every
+  ``compile_*_stream`` builder returns the same ``(handler,
+  out_schema, state_schema)`` triple; the handler is a plain generator
+  ``handler(key, pdfs, state)``.
+- State is parallel arrays ``<table>_<col>`` plus scalars. A NULL
+  class is stored as ``''`` plus a ``<p>_nul`` flag, a NULL value as
+  NaN; the runtime decodes both to None, so machines never see the
+  encodings.
+- Input rows decode once, column-wise, to ``(ts_us, id, cls, val)``
+  tuples (:func:`streams.ingest_chunk`).
+- Fold machines (run-fold, suffix) keep a watermark hold buffer:
+  only events with ``ts_ms <= wm_ms`` fold, in full ``(ts, id)``
+  event-time order across batches; the rest wait in ``buf_*`` and a
+  timer 1 ms before the earliest held event re-folds them.
+- Tie residual: Spark drops ``ts < wm`` as late while the fold admits
+  ``ts_ms <= wm_ms``, so an exact-millisecond tie arriving in a later
+  batch folds in arrival order (pinned by
+  tests/test_streaming_parity.py::
+  test_pattern_stream_exact_watermark_tie_folds_in_arrival_order).
+- Clamp residual: Spark only accepts a timeout above the current
+  watermark, so every timer is clamped to ``wm_ms + 1``. A clamped
+  deadline fires one watermark advance late; if the final watermark
+  lands exactly on it, that firing never happens (any later data for
+  the key heals it).
 
-Compilable subset (validated by :func:`compile_stream`): any
-greedy-strategy pattern — ranged/unbounded quantifiers, alternation,
-NULL-safe runs, within bounds — plus, since round 12, each of the
-batch compiler's extensions individually:
+The machines:
 
-- **iterative-condition guards**: non-final guards with any aggregate
-  (their runs are CLOSED at candidacy) and final-step guards
-  aggregating with ``first`` (the one anchor aggregate fixed the
-  instant the run opens). Guarded patterns carry the five per-run
-  value aggregates in the extended state schema
-  (:data:`STREAM_STATE_SCHEMA_VAL`); unguarded patterns keep the base
-  schema byte-identical.
-- **optional steps** (``min_count=0``, non-final): no automaton union
-  — expand_optional's variants are mutually exclusive per anchor, so
-  candidacy tries each variant's step list against the same
-  closed-run window suffix (pattern_match_optional_stream).
-- **after-match skip strategies** (to_next / no_skip): every
-  (start_off, consumed-length) sub-match is fixed by the closed first
-  run at anchor open, so the enumeration happens emit-locally — the
-  incremental image of compile_greedy's row-local explode
-  (pattern_match_afterskip_stream).
-- **guards × optional steps** and **guards × skip strategies**
-  (round 13 — VERDICT r12 directive 1): guard specs compile
-  PER-VARIANT with indices remapped into each variant's own step
-  positions (the incremental image of the batch compiler re-running
-  compile_greedy per expanded variant); a guard ON a dropped optional
-  step leaves that variant matching unguarded with NULL guard
-  measures, exactly the batch union's fill-in
-  (pattern_match_optional_guard_stream). Skip expansion is emission-
-  local and guard aggregates range over maximal runs in both modes
-  (the batch contract), so the two compose orthogonally
-  (pattern_match_skipguard_stream).
+- **Run-fold** (:func:`compile_stream`) — any greedy-strategy pattern:
+  ranged/unbounded quantifiers, alternation (canonicalized to one
+  class by a row-local relabel before the fold), NULL-safe runs,
+  within bounds, optional steps, after-match skip strategies, value
+  guards and ``until`` stop conditions (resolved before the fold by
+  :func:`operators.cep.apply_until`). State: the last ``len(steps) −
+  1`` CLOSED maximal runs plus the open run (``cur_len`` is the
+  open-run flag; NULL classes form runs of their own). When a run of
+  the final step's class opens, the closed-run window is checked
+  against the other steps — all fixed at that instant under strict
+  contiguity — and the match emits once the anchor run reaches
+  ``min_count`` folded events. A final step whose semantics range
+  over the MAXIMAL anchor run (``exact``, or a guard aggregating with
+  anything but ``first``) emits at anchor-run CLOSE instead, when the
+  next different-class event settles the run; its oracle filters on
+  the closing run's start.
+- **Suffix** (:func:`compile_suffix_stream`) — per-EVENT anchoring over
+  fixed-count steps, where run compression is exactly wrong: a window
+  of the last W folded events decides each anchor at its own fold.
+- **Pending-state** (:func:`compile_pending_stream`) — absence,
+  preceding-horizon counting, ``followedByAny`` pairs (± a blocker)
+  and timed-out partial matches: class-bucketed ``(us, id)`` buffers,
+  entries that settle once the watermark strictly passes their
+  deadline, retained events evicted below ``wm_ms·1000 − horizon``.
 
-- **final-step guards with any aggregate but 'first'** and
-  **exact=True on the final step** (round 14 — the last two
-  carve-outs, lifted): both range over the MAXIMAL anchor run, so
-  the automaton moves THESE patterns' emission boundary from
-  anchor-run OPEN to anchor-run CLOSE (the next different-class
-  event on the key), where the run's length and value aggregates are
-  settled facts — the deferral the absence machine has always used.
-  Candidacy at run open still pins the window (pend blocks eviction);
-  the deferred final-step guard and exact bounds are re-checked at
-  the closing fold, and the closed anchor's maximal length joins the
-  emission as ``n_<last>``. The oracle convention shifts with the
-  boundary: batch SQL plus a ms-aligned run-CLOSED-before-final-
-  watermark filter on the NEXT run's start
-  (pattern_detect_times_exact_stream,
-  pattern_match_finalguard_stream). A run never closed by a
-  different-class event never emits — mirrored by the oracle's
-  closing-run EXISTS.
-
-No semantic rejections remain: every batch-compilable greedy pattern
-now compiles for the stream (an optional FIRST step under a skip
-strategy is rejected by Pattern itself, for both engines, because
-the expansion base would differ per variant).
-
-- **until stop conditions** (round 15 — VERDICT r14 item 5, Flink
-  ``oneOrMore().until(cond)``): resolved BEFORE the machine by the
-  same row-local relabel the batch compiler uses
-  (``operators.cep.apply_until``, called by :func:`pattern_stream`):
-  stop events arrive as a private synthetic class that closes the
-  open run like any class change, so the automaton itself is
-  untouched — zero new state, zero new machinery
-  (pattern_detect_until_stream). compile_stream rejects an
-  UNRESOLVED until explicitly (it would silently consume stop
-  events into runs).
-
-The module's SECOND machine, :func:`compile_suffix_stream` (round
-14), streams the batch SUFFIX strategy — per-EVENT anchoring over
-fixed-count steps, where the run-fold machine's compression is
-exactly wrong (a purchase inside a longer click run matches via its
-last-2-clicks suffix; the run window has no per-event positions). A
-bounded window of the last W folded events (W = pattern event length
-− 1, compile-time constant) decides each anchor at its own fold;
-with it, EVERY batch CEP shape has a streaming twin
-(pattern_detect_cep_stream closes the last documented residual).
-
-Scale: state per key is O(pattern length) for the run window plus
-O(events inside the watermark delay) for the buffer — the same bound
-Flink CEP's event-time NFA keeps. No joins, no window state; the one
-shuffle is the groupBy(key). Handlers never remove state mid-stream
-(a run must survive batches in which its key is silent); a
-long-running deployment layers an idle-key TTL on top — demonstrated
-by stateful_session_ttl_stream (streams.py, round 12).
+Scale: run-fold and suffix state per key is O(pattern length) plus
+O(events inside the watermark delay) held; pending-state is O(events
+inside horizon + watermark delay) — the bounds Flink CEP's NFA keeps.
+The one shuffle is the groupBy(key). Run-fold handlers never remove
+state mid-stream (a run must survive batches in which its key is
+silent) unless ``idle_evict`` layers a TTL on top.
 """
 
 from __future__ import annotations
 
 import bisect
-from typing import Iterator
+import math
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -158,11 +100,11 @@ from ..operators.cep import (
 from ..registry import query
 from ..scratch import scratch_dir
 from .streams import (
+    HOLD_COLS,
+    _class_events,
     _events_stream,
-    hold_timer_ms,
-    ingest_chunk,
-    run_to_memory,
-    split_by_watermark,
+    keyed_handler,
+    run_keyed,
 )
 
 #: Generic automaton state: the closed-run window (arrays, most recent
@@ -196,8 +138,7 @@ STREAM_STATE_SCHEMA = StructType(
 #: inside the double arrays (array elements survive the state store
 #: either way; NaN is the unambiguous in-band choice because a real
 #: NaN compares false in every guard exactly like SQL NULL).
-#: Unguarded patterns keep the base schema byte-identical — the two
-#: shipped round-11/12 stream keys' state layout does not change.
+#: Unguarded patterns keep the base schema.
 STREAM_STATE_SCHEMA_VAL = StructType(
     list(STREAM_STATE_SCHEMA.fields)
     + [
@@ -217,26 +158,25 @@ STREAM_STATE_SCHEMA_VAL = StructType(
 
 #: Guard aggregate -> slot in the per-run value-aggregate tuple.
 _VA_SLOT = {"first": 0, "last": 1, "min": 2, "max": 3, "sum": 4}
+#: Value-aggregate columns of the run tables, in _VA_SLOT order.
+_VA_COLS = ("vf", "vl", "vmn", "vmx", "vsm")
 
 
 def _emit_on_close(pat: Pattern) -> bool:
     """True when the pattern's FINAL step carries semantics that range
     over the MAXIMAL anchor run — ``exact`` (the run's total length
     must sit in [min, max]) or a non-``first`` guard aggregate (it
-    reads the whole run's values). Both were compile_stream
-    rejections through round 13; round 14 lifts them by moving the
-    emission boundary from anchor-run OPEN to anchor-run CLOSE (the
-    next event of a different class on the key), where the maximal
-    run is a settled fact — the same deferral the absence machine has
-    always used for its watermark-proved negations (VERDICT r13 item
-    4). The oracle convention shifts accordingly: batch SQL plus a
-    ms-aligned run-CLOSED-before-final-watermark filter (the closing
-    run's start, not the anchor run's)."""
+    reads the whole run's values). Such patterns emit at anchor-run
+    CLOSE (the next event of a different class on the key), where the
+    maximal run is a settled fact, instead of at anchor-run OPEN. The
+    oracle convention shifts accordingly: batch SQL plus a ms-aligned
+    run-CLOSED-before-final-watermark filter (the closing run's start,
+    not the anchor run's)."""
     last = pat.steps[-1]
     # exact with max_count=None is a no-op in the batch compiler
     # (compile_greedy caps the anchor run only when a max exists), so
-    # it must not shift the stream's emission boundary either
-    # (review r14): the pattern is semantically the non-exact twin.
+    # it must not shift the stream's emission boundary either: the
+    # pattern is semantically the non-exact twin.
     return (last.exact and last.max_count is not None) or (
         last.guard is not None and last.guard.agg != "first"
     )
@@ -261,7 +201,7 @@ def stream_out_schema(pat: Pattern) -> StructType:
         StructField(f"n_{s.name}", LongType()) for s in pat.steps[:-1]
     ]
     if _emit_on_close(pat):
-        # run-CLOSE emission (round 14): the anchor run is closed by
+        # run-CLOSE emission: the anchor run is closed by
         # the time the match emits, so its maximal length IS known —
         # emitted like compile_greedy's n_<last> measure
         fields.append(StructField(f"n_{pat.steps[-1].name}", LongType()))
@@ -285,72 +225,50 @@ def stream_out_schema(pat: Pattern) -> StructType:
 
 
 def compile_stream(pat: Pattern, idle_evict: bool = False):
-    """Compile a greedy-strategy Pattern into an
-    ``applyInPandasWithState`` handler. Returns
-    ``(handler, out_schema, STREAM_STATE_SCHEMA)``.
+    """Compile a greedy-strategy Pattern into the run-fold machine.
+    Returns ``(handler, out_schema, state_schema)``; the state schema is
+    :data:`STREAM_STATE_SCHEMA`, or :data:`STREAM_STATE_SCHEMA_VAL` when
+    a step carries a guard.
 
-    The caller canonicalizes alternation on the stream FIRST (see
-    :func:`pattern_stream`), so every ``Step.cls`` reaching the
-    automaton is a single class string.
+    The caller canonicalizes alternation and resolves ``until`` stop
+    conditions on the stream first (see :func:`pattern_stream`), so
+    every ``Step.cls`` reaching the machine is a single class string.
 
-    ``idle_evict=True`` (round 13 — VERDICT r12 directive 7) layers
-    the stateful_session_ttl_stream idle-key eviction onto the
-    automaton, with the pattern's ``within`` bound as the TTL:
-    requires ``within_hours``, and proves the cep_stream module
-    docstring's long-promised "layer a TTL on top" claim. A key whose
-    open run's within-deadline the watermark has STRICTLY passed
-    (``(cur_start + within) // 1000 < wm_ms``), with no pending
-    anchor and no held events, can no longer contribute its retained
-    state to any future match — every retained run (the open run is
-    the newest; the closed window is older still) would sit at or
-    below the step-1 position of a future candidate, whose within
-    check then fails by construction. Two eviction grades:
+    Optional steps compile as variants over the same closed-run window:
+    expand_optional's present/absent sub-patterns are mutually exclusive
+    per anchor under maximal-run contiguity, so candidacy tries each
+    variant's non-final steps against the window suffix and at most one
+    matches. Guards compile per variant, with step indices remapped into
+    that variant's own positions; a guard on a dropped optional step
+    leaves the variant unguarded with NULL guard measures (the batch
+    union's fill-in). Under a skip strategy the first step's max bounds
+    the consumed count, not the run, so candidacy lifts it and the
+    emission re-applies it per sub-match.
 
-    - the open run's class is NOT a pattern class (or there is no
-      open run): the state row is REMOVED outright — a separator run
-      only ever occupies window slots it structurally fails, which a
-      missing slot fails identically;
-    - the open run's class IS a pattern class: the closed-run window
-      is dropped but the open run's scalars survive as a STUB,
-      because a future same-class event must EXTEND this run (strict
-      contiguity has no time gaps) — full removal would restart the
-      run with a fresh start timestamp and fabricate matches the
-      batch oracle rejects on the merged run's true (old) start. The
-      stub keeps exactly the fields that preserve that suppression:
-      class, NULL flag, start (+ the value aggregates under guards).
+    ``idle_evict=True`` adds idle-key eviction with the pattern's
+    ``within`` bound as the TTL (requires ``within_hours``). A key whose
+    open run's within-deadline the watermark has strictly passed
+    (``(cur_start + within) // 1000 < wm_ms``), with no pending anchor
+    and no held events, can no longer contribute its retained runs to a
+    match: every retained run would sit at or below the first-step
+    position of a future candidate, whose within check then fails.
 
-    Eviction never touches a live partial: ``pend == 1`` (an anchor
-    run awaiting min_count) blocks it, as does any held event and an
-    unexpired within-deadline — pinned by
-    tests/test_streaming_parity.py's idle-evict battery.
+    - If the open run's class is not a pattern class (or there is no
+      open run), the state is removed: a separator run only occupies
+      window slots it fails, which a missing slot fails identically.
+    - If it is a pattern class, the closed-run window is dropped but
+      the open run survives as a stub (class, NULL flag, start, value
+      aggregates): a future same-class event must extend this run, and
+      its old start keeps merged-run candidates failing ``within``
+      exactly as the batch oracle does. The stub is kept with no timer
+      — contiguity has no time bound, so removal never becomes safe.
 
-    **Residual state floor** (ADVICE r13 item 1 — "idle keys evict"
-    would overstate; this is what actually remains, and why each
-    piece is correctness-forced rather than a TODO):
-
-    - a STUB-bed pattern-class key retains its O(1) scalars FOREVER,
-      with no timer re-armed: maximal-run contiguity has no time
-      bound, so a same-class event arriving arbitrarily late still
-      EXTENDS the stubbed run, and the stub's old start must survive
-      to keep merged-run candidates failing ``within`` exactly as the
-      batch oracle does. There is no instant at which full removal
-      becomes provably safe, hence no follow-up timer to arm.
-    - a ``pend == 1`` key retains its FULL window state, also with no
-      TTL timer: the pending anchor run can reach ``min_count`` via
-      same-class extensions arbitrarily late (``within`` bounds the
-      match's START spread, not the anchor run's extension), at which
-      point emission reads the closed-run window — so neither removal
-      nor a stub downgrade (which drops that window) is ever sound
-      while the run stays open. The run closes only when a
-      different-class event arrives, and that event re-enters the
-      handler anyway — a timer would buy nothing.
-
-    So with eviction on, worst-case retained state is O(1) per idle
-    key whose LAST event is pattern-class, plus full O(pattern
-    length) windows for keys sitting on a live pending anchor — the
-    semantic floor of maximal-run CEP, not an implementation gap.
-    Keys whose last run is a separator class (the common idle shape)
-    are removed outright.
+    A pending anchor (``pend == 1``) blocks eviction and keeps its full
+    window with no TTL timer: the anchor run can reach ``min_count``
+    arbitrarily late, and the event that closes it re-enters the
+    handler anyway. Worst-case retained state with eviction on is O(1)
+    per idle key whose last run is a pattern class, plus full windows
+    for keys on a live pending anchor.
     """
     last = pat.steps[-1]
     if last.min_count == 0:
@@ -358,20 +276,6 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
             "the final (anchor) step cannot be optional — a pattern "
             "must end on a concrete anchor run"
         )
-    # optional x skip composes since round 13: Pattern itself rejects
-    # an optional FIRST step under a skip strategy (the expansion
-    # base would differ per variant), and with the first step pinned
-    # non-optional every variant shares the same expansion step — the
-    # emit-local enumeration reads the variant's own run lengths, so
-    # nothing else changes (pattern_match_optional_skip_stream).
-    # Final-step exact / non-'first' final guards (round 14 — the
-    # last two compile_stream carve-outs, rejected r12/r13 with the
-    # maximal-anchor-run argument): both become decidable by moving
-    # this pattern's emission boundary from anchor-run OPEN to
-    # anchor-run CLOSE — see :func:`_emit_on_close`. Everything else
-    # (candidacy, window, guards on closed runs) is unchanged; the
-    # anchor's own length/aggregates are simply read after the run's
-    # closing event folds instead of at its first event.
     emit_on_close = _emit_on_close(pat)
     if any(len(s.clses()) > 1 for s in pat.steps):
         raise ValueError(
@@ -392,22 +296,9 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
         )
     pattern_clses = frozenset(s.cls for s in pat.steps)
 
-    # Plain-python spec (closure must pickle to executors without
-    # dragging Pattern/Step class state along). Optional steps
-    # (round 12) compile as VARIANTS over the SAME closed-run window:
-    # expand_optional's present/absent sub-patterns are mutually
-    # exclusive per anchor under maximal-run contiguity (its batch
-    # proof), so candidacy tries each variant's non-final step list
-    # against the window suffix and at most one matches — no automaton
-    # union, no extra state; the window is sized by the FULL step
-    # list. A non-optional pattern is the one-variant special case
-    # (identical checks to the pre-r12 single-mids path).
+    # Plain-python spec, so the closure pickles to executors without
+    # Pattern/Step class state.
     step_names = tuple(s.name for s in pat.steps[:-1])
-    # After-match skip strategies (round 12): under to_next / no_skip
-    # the FIRST step's max bounds the CONSUMED count, not the run
-    # (compile_greedy's exact rule) — candidacy must not reject a
-    # longer first run, so its max is lifted from the candidacy spec
-    # and re-applied in emit()'s sub-match enumeration.
     skip_mode = pat.skip
     expand = skip_mode != "past_last" and len(pat.steps) > 1
     first = pat.steps[0]
@@ -423,22 +314,13 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
             for i, s in enumerate(v.steps[:-1])
         )
 
-    # Guard emission order: one (g_<name>, g_<name>_ref) pair per
-    # guarded step of the FULL pattern, in step order — the schema
-    # every variant's rows share (a variant that DROPS a guarded
-    # optional step emits NULL for its pair, the batch union's
-    # convention).
+    # One (g_<name>, g_<name>_ref) pair per guarded step of the FULL
+    # pattern, in step order — the emission schema every variant shares.
     guard_names = tuple(s.name for s in pat.steps if s.guard is not None)
 
     def _variant_spec(v, dropped):
-        """Per-variant compile: structural mids + VARIANT-LOCAL guard
-        indices (round 13 — VERDICT r12 directive 1). Guard
-        step-indexing formerly assumed the full step list, which is
-        wrong the moment a variant drops an optional step; remapping
-        into the variant's own step positions is exactly what the
-        batch compiler does by re-running compile_greedy per variant
-        (cep.py), expressed here as index translation because the
-        automaton shares ONE closed-run window across variants."""
+        """Structural mids plus guard checks and emission slots with
+        step indices local to variant ``v`` (its anchor is index k)."""
         v_idx = {s.name: i for i, s in enumerate(v.steps)}
         checks = tuple(
             (
@@ -490,94 +372,34 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
         else None
     )
     out_schema = stream_out_schema(pat)
-    out_cols = [f.name for f in out_schema.fields]
-    ts_col, id_col, cls_col = pat.ts, pat.order_id, pat.cls_col
-    # Iterative conditions (round 12, variant-local since round 13):
-    # each variant carries its own plain-python guard spec — (this
-    # step index, this agg slot, cmp, ref step index, ref agg slot,
-    # factor), all indices into the VARIANT's step list (local index
-    # k = its anchor = the open run). Guards are evaluated at
-    # candidacy and their sides re-derived at emit from win/cur (NOT
-    # cached in state): the closed window cannot shift while the
-    # anchor run stays open, so a pend-ing match re-reads identical
-    # values even a batch later.
+    # Guard sides are evaluated at candidacy and re-derived at emit from
+    # the window and the open run, never cached: the closed window
+    # cannot shift while the anchor run stays open.
     needs_val = bool(guard_names)
-    val_col = pat.val_col
     state_schema = STREAM_STATE_SCHEMA_VAL if needs_val else STREAM_STATE_SCHEMA
-    nan = float("nan")
+    cur_va = tuple(f"cur_{c}" for c in _VA_COLS)
+    no_va = (None,) * len(_VA_COLS)
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def dec(v):  # NaN-encoded NULL back to None
-            return None if v is None or v != v else float(v)
-
-        if state.exists:
-            if needs_val:
-                (w_cls, w_nul, w_len, w_start,
-                 cc, c_nul, cl, cs, cf, pend,
-                 b_id, b_us, b_cls, b_nul,
-                 w_vf, w_vl, w_vmn, w_vmx, w_vsm,
-                 c_vf, c_vl, c_vmn, c_vmx, c_vsm,
-                 b_val) = state.get
-                win = [
-                    (None if n else c, int(ln), int(st),
-                     (dec(vf), dec(vl), dec(mn), dec(mx), dec(sm)))
-                    for c, n, ln, st, vf, vl, mn, mx, sm in zip(
-                        w_cls, w_nul, w_len, w_start,
-                        w_vf, w_vl, w_vmn, w_vmx, w_vsm,
-                    )
-                ]
-                c_va = [dec(c_vf), dec(c_vl), dec(c_vmn),
-                        dec(c_vmx), dec(c_vsm)]
-                buf = [
-                    (int(u), int(i), None if n else c, dec(v))
-                    for u, i, c, n, v in zip(
-                        b_us, b_id, b_cls, b_nul, b_val
-                    )
-                ]
-            else:
-                (w_cls, w_nul, w_len, w_start,
-                 cc, c_nul, cl, cs, cf, pend,
-                 b_id, b_us, b_cls, b_nul) = state.get
-                win = [
-                    (None if n else c, int(ln), int(st), None)
-                    for c, n, ln, st in zip(w_cls, w_nul, w_len, w_start)
-                ]
-                c_va = None
-                buf = [
-                    (int(u), int(i), None if n else c, None)
-                    for u, i, c, n in zip(b_us, b_id, b_cls, b_nul)
-                ]
-            if c_nul:
-                cc = None
-        else:
-            win, buf = [], []
-            cc = cl = cs = cf = c_va = None
-            pend = 0
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                ingest_chunk(
-                    buf, chunk, ts_col, id_col, cls_col,
-                    val_col if needs_val else None,
-                )
-        ready, hold = split_by_watermark(buf, wm_ms)
+    def process(key, st, ready, wm_ms):
+        win = st["win"]  # (cls, len, start, *value aggregates)
+        cc, cl, cs, cf = (
+            st["cur_cls"], st["cur_len"], st["cur_start"], st["cur_first"]
+        )
+        pend = st["cur_pend"] or 0
+        c_va = [st[c] for c in cur_va] if needs_val else None
         out = []
 
         def run_va(i: int, k: int, closed: bool):
             """Value aggregates of variant-local step i's run (k = the
             variant's non-final step count): closed runs from the
             window suffix; the anchor (i == k) exposes only 'first'
-            while its run is still OPEN (fixed at open — the only
-            anchor aggregate the open-emission mode admits), and the
-            full five once the run is CLOSED (run-close emission,
-            round 14)."""
+            while its run is still OPEN, and all five once it is
+            CLOSED (run-close emission)."""
             if i == k:
                 if closed:
                     return tuple(c_va)
                 return (c_va[0], None, None, None, None)
-            return win[-k + i][3]
+            return win[-k + i][3:]
 
         def guards_ok(checks, k: int, mode: str) -> bool:
             """mode: 'open' = default open-emission candidacy (anchor
@@ -600,28 +422,24 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
 
         def candidate(anchor_start_us: int, mode: str = "open") -> int:
             """Closed-run window vs each variant's non-final steps +
-            the within bound + the variant's guards (indices already
-            remapped into the variant's step positions) — fully
-            determined the instant the anchor run opens, except a
-            close-emission pattern's FINAL-step guard, which 'defer'
-            skips here and 'close' settles at run close (the window
-            cannot shift while the anchor run stays open, so the
-            structural verdict is identical at both instants).
-            Returns the matched variant index, -1 if none (at most
-            one matches: the variants are mutually exclusive per
-            anchor, expand_optional's proof — guards cannot break
-            that, they only further FILTER a structurally-unique
-            variant)."""
+            the within bound + the variant's guards — fully determined
+            the instant the anchor run opens, except a close-emission
+            pattern's FINAL-step guard, which 'defer' skips here and
+            'close' settles at run close (the window cannot shift while
+            the anchor run stays open). Returns the matched variant
+            index, -1 if none (the variants are mutually exclusive per
+            anchor; guards only filter a structurally unique one)."""
             for vi, (v_mids, _names, checks, _emits, k) in enumerate(
                 variants
             ):
                 if len(win) < k:
                     continue
                 ok = True
-                for (m_cls, m_min, m_max), (r_cls, r_len, _, _) in zip(
+                for (m_cls, m_min, m_max), r in zip(
                     v_mids, win[-k:] if k else []
                 ):
-                    if r_cls != m_cls or r_len < m_min or (
+                    r_len = r[1]
+                    if r[0] != m_cls or r_len < m_min or (
                         m_max is not None and r_len > m_max
                     ):
                         ok = False
@@ -637,33 +455,27 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
             return -1
 
         def emit() -> None:
-            """Anchor run (cur) qualified: measures come from the
-            closed window, which cannot shift while cur stays open —
-            so the matched variant is recomputed here (a pend-ing
-            match re-derives the same one even a batch later).
-            Dropped optional steps emit n_<name> = 0, the batch
-            union's convention. Under a non-default skip strategy the
-            first run's sub-matches enumerate emit-locally — every
-            (start_off, consumed-length) pair is fixed by the closed
-            first run, the incremental image of compile_greedy's
-            row-local explode. Under run-CLOSE emission (round 14)
-            the anchor run is settled too: its final-step guard is
-            re-checked here against the FULL run aggregates (the one
-            check 'defer' candidacy skipped at open), and its maximal
-            length joins the row as n_<last>."""
+            """Anchor run (cur) qualified: the matched variant is
+            recomputed from the closed window, which cannot shift while
+            cur stays open, so a pending match re-derives the same one a
+            batch later. Dropped optional steps emit n_<name> = 0, the
+            batch union's convention. Under a skip strategy the first
+            run's sub-matches enumerate here — every (start_off,
+            consumed-length) pair is fixed by the closed first run.
+            Under run-CLOSE emission the deferred final-step guard is
+            re-checked against the full run aggregates, and the run's
+            maximal length joins the row as n_<last>."""
             mode = "close" if emit_on_close else "open"
             vi = candidate(cs, mode)
             if vi < 0:
-                # run-close only: the deferred final-step guard
-                # failed against the closed anchor run — no match
-                # (structural candidacy already passed at run open,
-                # and the window has not shifted since)
+                # run-close only: the deferred final-step guard failed
+                # against the closed anchor run
                 return
             _mids, v_names, _checks, emits, k = variants[vi]
             lens = {
                 n: win[-k + j][1] for j, n in enumerate(v_names)
             }
-            head = [key[0], int(cf)]
+            head = [key, int(cf)]
             # run-close: n_<last> = the closed anchor run's length,
             # capped at max_count when non-exact (compile_greedy's
             # least(run_len, max) consumed-measure convention)
@@ -728,10 +540,8 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
             # class change: close the current run, shift the window,
             # open the new run. Run-CLOSE emission fires HERE — the
             # closing event settles the anchor run's maximal length
-            # and full value aggregates, so exact bounds and the
-            # deferred final-step guard are decidable (round 14); the
-            # emission must precede the window shift (candidacy reads
-            # the window WITHOUT the anchor run).
+            # and full value aggregates; it must precede the window
+            # shift (candidacy reads the window WITHOUT the anchor run).
             if cl is not None:
                 if (
                     emit_on_close
@@ -744,7 +554,7 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
                     )
                 ):
                     emit()
-                win.append((cc, cl, cs, tuple(c_va) if needs_val else None))
+                win.append((cc, cl, cs) + (tuple(c_va) if needs_val else no_va))
                 del win[: max(0, len(win) - k_closed)]
                 pend = 0
             cc, cl, cs, cf = cls, 1, us, eid
@@ -754,74 +564,41 @@ def compile_stream(pat: Pattern, idle_evict: bool = False):
                 us, "defer" if emit_on_close else "open"
             ) >= 0:
                 if emit_on_close:
-                    # run-close emission: hold the structurally-valid
-                    # candidate as pending regardless of min_count —
-                    # the run's closing event (next different-class
-                    # event on the key) settles it. pend also blocks
-                    # idle eviction, which keeps the window this
-                    # match still needs.
+                    # hold the structurally valid candidate regardless
+                    # of min_count — the run's closing event settles
+                    # it; pend also blocks idle eviction, which keeps
+                    # the window this match still needs
                     pend = 1
                 elif anchor_min == 1:
                     emit()
                     pend = 0
                 else:
                     pend = 1
-        ttl_timer = None
-        if idle_evict and not hold and not pend:
+        timer = None
+        if idle_evict and not st["buf"] and not pend:
             if cl is not None and (cs + within_us) // 1000 >= wm_ms:
-                # live: arm the TTL timer at the open run's within
-                # deadline (clamped like hold_timer_ms) so an idle
-                # key re-enters the handler to evict itself
-                ttl_timer = max((cs + within_us) // 1000, wm_ms + 1)
+                # live: re-enter at the open run's within deadline
+                timer = (cs + within_us) // 1000
             elif cl is None or cc not in pattern_clses:
-                # separator (or empty) state: remove outright — see
-                # compile_stream's docstring for the safety argument
-                if state.exists:
-                    state.remove()
-                yield pd.DataFrame(
-                    {c: [r[i] for r in out]
-                     for i, c in enumerate(out_cols)}
-                )
-                return
+                st.clear()  # separator (or empty) state: remove
+                return out, None
             else:
-                # pattern-class open run past its deadline: STUB —
-                # drop the closed-run window, keep the open run's
-                # scalars (a future same-class event extends this
-                # run; its old start must survive so merged-run
-                # candidates keep failing within, matching batch)
-                win = []
-        base = (
-            ["" if r[0] is None else r[0] for r in win],
-            [1 if r[0] is None else 0 for r in win],
-            [r[1] for r in win],
-            [r[2] for r in win],
-            "" if cc is None else cc,
-            1 if (cl is not None and cc is None) else 0,
-            cl, cs, cf, pend,
-            [e[1] for e in hold],
-            [e[0] for e in hold],
-            ["" if e[2] is None else e[2] for e in hold],
-            [1 if e[2] is None else 0 for e in hold],
+                win = []  # pattern-class run past its deadline: stub
+        st.update(
+            win=win, cur_cls=cc, cur_len=cl, cur_start=cs, cur_first=cf,
+            cur_pend=pend,
         )
         if needs_val:
-            def enc(v):
-                return nan if v is None else float(v)
+            st.update(zip(cur_va, c_va or no_va))
+        return out, timer
 
-            cur = c_va if c_va is not None else (None,) * 5
-            base = base + tuple(
-                [[enc(r[3][k]) for r in win] for k in range(5)]
-                + [enc(cur[k]) for k in range(5)]
-                + [[enc(e[3]) for e in hold]]
-            )
-        state.update(base)
-        if hold:
-            state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        elif ttl_timer is not None:
-            state.setTimeoutTimestamp(ttl_timer)
-        yield pd.DataFrame(
-            {c: [r[i] for r in out] for i, c in enumerate(out_cols)}
-        )
-
+    cols = (
+        pat.ts, pat.order_id, pat.cls_col, pat.val_col if needs_val else None
+    )
+    handler = keyed_handler(
+        process, out_schema, state_schema, cols,
+        {"win": ("cls", "len", "start") + _VA_COLS}, hold=True,
+    )
     return handler, out_schema, state_schema
 
 
@@ -837,11 +614,8 @@ def pattern_stream(
     streaming-safe) → compiled automaton → memory sink.
 
     ``checkpoint`` passes through to run_to_memory so state-reader
-    keys can re-open the finished query's store offline WITHOUT
-    copying this launch block (the ADVICE r13 lesson one layer up —
-    a hand-rolled copy in stream_state_reader_automaton had already
-    dropped the has_until column rule it never knew about; review
-    r15)."""
+    keys can re-open the finished query's store offline without
+    copying this pipeline."""
     has_guard = any(s.guard is not None for s in pat.steps)
     has_until = any(s.until is not None for s in pat.steps)
     cols = [pat.key, pat.ts, pat.order_id, pat.cls_col]
@@ -853,7 +627,7 @@ def pattern_stream(
         .select(*cols)
     )
     if has_until:
-        # Pure relabel projection (operators/cep.py round 15) — the
+        # Pure relabel projection (operators/cep.py) — the
         # automaton then sees a plain pattern, with stop events as
         # foreign-class run boundaries; the value column was only
         # needed for the relabel unless guards read it too.
@@ -862,15 +636,9 @@ def pattern_stream(
             ev = ev.drop(pat.val_col)
     if any(len(s.clses()) > 1 for s in pat.steps):
         ev, pat = canonicalize_alternation(ev, pat)
-    handler, out_schema, state_schema = compile_stream(pat)
-    result = ev.groupBy(pat.key).applyInPandasWithState(
-        handler,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_keyed(
+        spark, ev, pat.key, *compile_stream(pat), checkpoint=checkpoint
     )
-    return run_to_memory(spark, result, mode="append", checkpoint=checkpoint)
 
 
 @query(
@@ -1288,129 +1056,198 @@ def pattern_match_afterskip_stream(
 
 
 # ---------------------------------------------------------------------------
-# Absence CEP (Flink ``notFollowedBy(..).within(..)``) — round 12.
-#
-# Negation is the one CEP shape the compiled run-fold automaton above
-# cannot express: a match is declared by the ABSENCE of an event, so
-# emission must wait until the watermark proves nothing in the horizon
-# can still arrive — Flink's NFA keeps such candidates in a pending
-# state and resolves them on watermark advance. The automaton below is
-# that pending-state machine directly, and it is SIMPLER than the
-# run-fold: existence of a purchase inside a click's horizon is
-# order-insensitive, so no watermark hold-buffer / re-fold is needed —
-# in-watermark out-of-order arrivals just accumulate into the pending
-# sets, and a click can only resolve >= horizon after its own event
-# time, by which point every in-frame purchase either arrived or is
-# watermark-late (dropped upstream by the same ``ts < wm`` contract
-# the resolution rule is aligned to).
+# Pending-state machines: absence (``notFollowedBy(..).within(..)``),
+# preceding-horizon counting (``followedBy`` with a time bound),
+# ``followedByAny`` pairing (± a blocker between the steps) and
+# timed-out partial matches (``TimedOutPartialMatchHandler``). A match
+# here is a set fact about a time frame, not an order fact about runs,
+# so no hold buffer is needed: events accumulate in class-bucketed
+# buffers in arrival order, and each pending entry resolves once the
+# watermark proves every event of its frame has arrived.
 
-#: Pending-state schema for the absence automaton: unresolved clicks
-#: (µs + event_id, parallel arrays) and the retained purchase
-#: timestamps (µs). Purchases older than horizon + watermark-delay
-#: can no longer suppress anything and are evicted — state per key is
-#: O(events inside horizon + watermark delay), Flink's NFA bound for
-#: a within-bounded notFollowedBy.
-ABSENCE_STATE_SCHEMA = StructType(
-    [
-        StructField("click_us", ArrayType(LongType())),
-        StructField("click_id", ArrayType(LongType())),
-        StructField("purch_us", ArrayType(LongType())),
-    ]
-)
-
-ABSENCE_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("click_event", LongType()),
-    ]
-)
+_HOUR_US = 3600 * 1_000_000
 
 
-def compile_absence_stream(
-    anchor_cls: str, absent_cls: str, horizon_us: int
+def compile_pending_stream(
+    buffers, pending, lag_us, horizon_us, resolve, out_cols
 ):
-    """Build the pending-state handler for ``anchor NOT FOLLOWED BY
-    absent WITHIN horizon`` (frame ``[anchor_ts, anchor_ts + horizon]``
-    inclusive at µs precision — the batch key's RANGE frame).
+    """The one pending-state machine. Returns ``(handler, out_schema,
+    state_schema)``.
 
-    Resolution rule: an anchor emits/suppresses only once
-    ``(anchor_us + horizon_us) // 1000 < wm_ms`` (STRICT): any
-    not-yet-arrived suppressor has ``ts_ms >= wm_ms`` (Spark admits
-    the ``ts == wm`` tie), hence ``ts_us >= wm_ms*1000 >
-    anchor_us + horizon_us`` — outside the frame. The matching oracle
-    filter is the ms-aligned ``(epoch_us(ts) + horizon) // 1000 <
-    final_wm_ms``.
-    """
+    ``buffers`` maps each input class to the name of its ``(us, id)``
+    buffer, stored as the ``<name>_us`` / ``<name>_id`` arrays in
+    mapping order; events of other classes are ignored (the registered
+    keys filter them before the shuffle anyway). Each entry of the
+    ``pending`` buffer owns the frame ``[us + lag_us − horizon_us, us +
+    lag_us]``, and ``resolve(us, id, bufs)`` returns its output rows
+    minus the leading ``user_id`` from the events inside it. An entry
+    settles once ``(us + lag_us) // 1000 < wm_ms`` (STRICT): any unseen
+    event has ``ts_ms >= wm_ms``, hence ``ts_us >= wm_ms·1000 > us +
+    lag_us``, past the frame's end, so the resolution is final. A timer
+    at the earliest pending deadline re-enters a silent key.
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            c_us, c_id, p_us = state.get
-            clicks = [(int(u), int(i)) for u, i in zip(c_us, c_id)]
-            purchases = [int(u) for u in p_us]
-        else:
-            clicks, purchases = [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, cls in zip(
-                    chunk["ts"], chunk["event_id"], chunk["event_type"]
-                ):
-                    us = int(ts.value) // 1_000
-                    if cls == anchor_cls:
-                        clicks.append((us, int(eid)))
-                    elif cls == absent_cls:
-                        purchases.append(us)
-        # Resolve every anchor whose horizon the watermark has passed:
-        # emit iff no retained suppressor lands inside its frame.
-        # Suppressors sort once per invocation and each anchor probes
-        # by bisect (ADVICE r12 item 2) — O((A + P)·log P), not
-        # O(A·P), under a key-skewed watermark-delay backlog.
-        emitted, pending = [], []
-        purchases.sort()
-        for us, eid in clicks:
-            if (us + horizon_us) // 1000 < wm_ms:
-                i = bisect.bisect_left(purchases, us)
-                if i == len(purchases) or purchases[i] > us + horizon_us:
-                    emitted.append((key[0], eid))
+    Every other buffer is retained, sorted by ``(us, id)`` for
+    ``resolve``'s bisects, and evicts below the exact floor
+    ``wm_ms·1000 − horizon_us``: an unsettled entry has ``us + lag_us
+    >= wm_ms·1000``, so no pending or future frame starts lower. State
+    per key is O(events inside horizon + watermark delay), the NFA
+    bound for a within-bounded pattern."""
+    names = tuple(buffers.values())
+    retained = [n for n in names if n != pending]
+    state_schema = StructType(
+        [
+            StructField(f"{n}_{c}", ArrayType(LongType()))
+            for n in names
+            for c in ("us", "id")
+        ]
+    )
+    out_schema = StructType(
+        [StructField(c, LongType()) for c in ("user_id",) + out_cols]
+    )
+
+    def process(key, st, events, wm_ms):
+        for us, eid, cls, _ in events:
+            name = buffers.get(cls)
+            if name is not None:
+                st[name].append((us, eid))
+        for n in retained:
+            st[n].sort()
+        rows, waiting = [], []
+        for us, eid in st[pending]:
+            if (us + lag_us) // 1000 < wm_ms:
+                rows += [(key,) + r for r in resolve(us, eid, st)]
             else:
-                pending.append((us, eid))
-        # Evict suppressors no pending or future anchor can reach:
-        # a pending anchor has (us + horizon_us) // 1000 >= wm_ms,
-        # which for non-negative ints is exactly us >= wm_ms*1000 −
-        # horizon_us; a future anchor folds from the hold buffer
-        # (us // 1000 > wm_ms) or a later batch, so its us exceeds
-        # wm_ms*1000 outright. Suppression needs p_us >= anchor_us,
-        # so the exact floor is sound (ADVICE r13 item 4: the former
-        # −999 µs slack was dead conservatism inconsistent with
-        # compile_pairs_stream's exact floor).
+                waiting.append((us, eid))
         floor_us = wm_ms * 1000 - horizon_us
-        purchases = [p for p in purchases if p >= floor_us]
-        state.update(
-            (
-                [u for u, _ in pending],
-                [i for _, i in pending],
-                purchases,
-            )
-        )
-        if pending:
-            # shares hold_timer_ms's API-forced clamp residual (the
-            # wm_ms + 1 floor) — see its docstring for the boundary
-            state.setTimeoutTimestamp(
-                max(
-                    min((u + horizon_us) // 1000 for u, _ in pending),
-                    wm_ms + 1,
-                )
-            )
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in emitted],
-                "click_event": [r[1] for r in emitted],
-            }
-        )
+        for n in retained:
+            st[n] = [e for e in st[n] if e[0] >= floor_us]
+        st[pending] = waiting
+        if not waiting:
+            return rows, None
+        return rows, (min(u for u, _ in waiting) + lag_us) // 1000
 
-    return handler
+    handler = keyed_handler(
+        process, out_schema, state_schema,
+        ("ts", "event_id", "event_type", None),
+        {n: ("us", "id") for n in names},
+    )
+    return handler, out_schema, state_schema
+
+
+def compile_absence_stream(anchor_cls: str, absent_cls: str, horizon_us: int):
+    """``anchor NOT FOLLOWED BY absent WITHIN horizon``: an anchor emits
+    ``click_event`` iff no absent-class event lands in ``[anchor_ts,
+    anchor_ts + horizon]`` (inclusive at µs — the batch key's RANGE
+    frame). It resolves once ``(anchor_us + horizon_us) // 1000 <
+    wm_ms``; the oracle's matching filter is ``(epoch_us(ts) + horizon)
+    // 1000 < final_wm_ms``."""
+
+    def resolve(us, eid, bufs):
+        absent = bufs["purch"]
+        i = bisect.bisect_left(absent, (us,))
+        if i == len(absent) or absent[i][0] > us + horizon_us:
+            return [(eid,)]
+        return []
+
+    return compile_pending_stream(
+        {anchor_cls: "click", absent_cls: "purch"}, "click",
+        horizon_us, horizon_us, resolve, ("click_event",),
+    )
+
+
+def compile_horizon_count_stream(
+    anchor_cls: str, target_cls: str, horizon_us: int, at_least: int
+):
+    """PRECEDING-horizon counting: each anchor counts targets inside
+    ``[anchor_ts − horizon, anchor_ts]`` (inclusive — the batch RANGE
+    frame) and emits ``(purchase_event, clicks_6h)`` when the count
+    reaches ``at_least``. The frame ends at the anchor itself, so it
+    settles as soon as ``a_ms < wm_ms`` — no horizon wait."""
+
+    def resolve(us, eid, bufs):
+        t = bufs["target"]
+        n = bisect.bisect_right(t, (us, math.inf)) - bisect.bisect_left(
+            t, (us - horizon_us,)
+        )
+        return [(eid, n)] if n >= at_least else []
+
+    return compile_pending_stream(
+        {anchor_cls: "anchor", target_cls: "target"}, "anchor",
+        0, horizon_us, resolve, ("purchase_event", "clicks_6h"),
+    )
+
+
+def compile_pairs_stream(
+    anchor_cls: str,
+    target_cls: str,
+    horizon_us: int,
+    blocker_cls: str | None = None,
+):
+    """``followedByAny`` pairing: each settling target emits
+    ``(click_event, purchase_event, gap_us)`` for every retained anchor
+    inside ``[t_us − horizon, t_us)``. A target settles once ``t_ms <
+    wm_ms``, when every anchor before it has arrived.
+
+    ``blocker_cls`` (middle negation — ``notFollowedBy`` between
+    steps): a target pairs only with anchors that have no blocker
+    strictly between them in ``(us, id)`` order. An unseen blocker has
+    ``b_ms >= wm_ms > t_ms`` — after the target, never between — so the
+    negation is final at settlement. Unblocked patterns store no
+    blocker arrays."""
+
+    def resolve(us, eid, bufs):
+        a, blk = bufs["anchor"], bufs.get("blocker")
+        lo = bisect.bisect_left(a, (us - horizon_us,))
+        hi = bisect.bisect_left(a, (us,))
+        return [
+            (a_i, eid, us - a_u)
+            for a_u, a_i in a[lo:hi]
+            if blk is None
+            or bisect.bisect_left(blk, (us, eid))
+            <= bisect.bisect_right(blk, (a_u, a_i))
+        ]
+
+    buffers = {anchor_cls: "anchor", target_cls: "target"}
+    if blocker_cls is not None:
+        buffers[blocker_cls] = "blocker"
+    return compile_pending_stream(
+        buffers, "target", 0, horizon_us, resolve,
+        ("click_event", "purchase_event", "gap_us"),
+    )
+
+
+def compile_timeout_stream(
+    first_cls: str, second_cls: str, third_cls: str, horizon_us: int
+):
+    """Timed-out partials of ``first followedBy second followedBy third
+    within(horizon)``. A start resolves once its deadline ``(start_us
+    + horizon) // 1000 < wm_ms``; the funnel's fate is then fixed: the
+    earliest second-class event strictly after the start (in ``(us,
+    id)`` order — the batch rn order restricted to these classes)
+    within the deadline, then the earliest third-class event strictly
+    after that one. A complete funnel is silent; otherwise the start
+    emits ``(start_event, n_matched, deadline_us)`` with the steps
+    matched at expiry. Resolution is deadline-time only, never early on
+    completion: an earlier second-class event can still arrive inside
+    the watermark delay and shift the chain."""
+
+    def resolve(us, eid, bufs):
+        deadline = us + horizon_us
+        s = bufs["second"]
+        i = bisect.bisect_right(s, (us, eid))
+        if i == len(s) or s[i][0] > deadline:
+            return [(eid, 1, deadline)]
+        t = bufs["third"]
+        j = bisect.bisect_right(t, s[i])
+        if j < len(t) and t[j][0] <= deadline:
+            return []
+        return [(eid, 2, deadline)]
+
+    return compile_pending_stream(
+        {first_cls: "start", second_cls: "second", third_cls: "third"},
+        "start", horizon_us, horizon_us, resolve,
+        ("start_event", "n_matched", "deadline_us"),
+    )
 
 
 @query(
@@ -1467,117 +1304,11 @@ def pattern_detect_notfollowedby_stream(
     rather than an optimizer artifact.) One shuffle on user_id, no
     joins, no window state.
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
+    ev = _class_events(spark, sf_dir, "click", "purchase")
+    return run_keyed(
+        spark, ev, "user_id",
+        *compile_absence_stream("click", "purchase", 6 * _HOUR_US),
     )
-    handler = compile_absence_stream("click", "purchase", 6 * 3600 * 1_000_000)
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=ABSENCE_OUT_SCHEMA,
-        stateStructType=ABSENCE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
-
-
-#: Horizon-counting state (pattern_detect_followedby_stream): pending
-#: anchors (µs + event_id) and retained target timestamps (µs) —
-#: the absence machine's schema, reused shape-for-shape.
-HORIZON_STATE_SCHEMA = StructType(
-    [
-        StructField("anchor_us", ArrayType(LongType())),
-        StructField("anchor_id", ArrayType(LongType())),
-        StructField("target_us", ArrayType(LongType())),
-    ]
-)
-
-HORIZON_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("purchase_event", LongType()),
-        StructField("clicks_6h", LongType()),
-    ]
-)
-
-
-def compile_horizon_count_stream(
-    anchor_cls: str, target_cls: str, horizon_us: int, at_least: int
-):
-    """Handler for PRECEDING-horizon counting (Flink ``followedBy``
-    with a time bound): each anchor counts targets inside
-    ``[anchor_ts − horizon, anchor_ts]`` (inclusive — the batch RANGE
-    frame) and emits when the count reaches ``at_least``.
-
-    A PRECEDING horizon resolves faster than the absence machine's
-    FOLLOWING one: the anchor settles as soon as ``a_ms < wm_ms`` —
-    any unseen target has ``t_ms >= wm_ms > a_ms``, hence
-    ``t_us >= wm_ms·1000 > a_us`` — strictly after the anchor,
-    outside its frame. Target retention mirrors the absence machine:
-    evict below ``wm_ms·1000 − horizon_us`` (nothing pending or
-    future can reach further back), so per-key state is O(events in
-    horizon + watermark delay)."""
-
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            a_us, a_id, t_us = state.get
-            anchors = [(int(u), int(i)) for u, i in zip(a_us, a_id)]
-            targets = [int(u) for u in t_us]
-        else:
-            anchors, targets = [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, cls in zip(
-                    chunk["ts"], chunk["event_id"], chunk["event_type"]
-                ):
-                    us = int(ts.value) // 1_000
-                    if cls == anchor_cls:
-                        anchors.append((us, int(eid)))
-                    elif cls == target_cls:
-                        targets.append(us)
-        # Targets sort once per invocation, each anchor counts its
-        # frame by two bisects (ADVICE r12 item 2) — O((A + T)·log T).
-        emitted, pending = [], []
-        targets.sort()
-        for us, eid in anchors:
-            if us // 1000 < wm_ms:
-                n = bisect.bisect_right(targets, us) - bisect.bisect_left(
-                    targets, us - horizon_us
-                )
-                if n >= at_least:
-                    emitted.append((key[0], eid, n))
-            else:
-                pending.append((us, eid))
-        floor_us = wm_ms * 1000 - horizon_us
-        targets = [t for t in targets if t >= floor_us]
-        state.update(
-            (
-                [u for u, _ in pending],
-                [i for _, i in pending],
-                targets,
-            )
-        )
-        if pending:
-            # shares hold_timer_ms's API-forced clamp residual (the
-            # wm_ms + 1 floor) — see its docstring for the boundary
-            state.setTimeoutTimestamp(
-                max(min(u for u, _ in pending) // 1000, wm_ms + 1)
-            )
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in emitted],
-                "purchase_event": [r[1] for r in emitted],
-                "clicks_6h": [r[2] for r in emitted],
-            }
-        )
-
-    return handler
 
 
 @query(
@@ -1619,23 +1350,11 @@ def pattern_detect_followedby_stream(
     ties match the batch RANGE frame (a click at the purchase's exact
     timestamp counts). O(events in 6 h + 10 min) state per key.
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
+    ev = _class_events(spark, sf_dir, "click", "purchase")
+    return run_keyed(
+        spark, ev, "user_id",
+        *compile_horizon_count_stream("purchase", "click", 6 * _HOUR_US, 2),
     )
-    handler = compile_horizon_count_stream(
-        "purchase", "click", 6 * 3600 * 1_000_000, 2
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=HORIZON_OUT_SCHEMA,
-        stateStructType=HORIZON_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
 
 
 @query(
@@ -1966,161 +1685,6 @@ def pattern_match_skipguard_stream(
     )
 
 
-# ---------------------------------------------------------------------------
-# Non-deterministic relaxed contiguity (Flink ``followedByAny``) —
-# round 13. Pairing is order-insensitive set logic like the horizon
-# machines (no hold-buffer fold needed): a target settles once the
-# watermark strictly passes it, at which point every in-frame anchor
-# has provably arrived (an anchor with a_us < t_us arriving later
-# would be watermark-late and dropped upstream by the same ts < wm
-# contract the resolution rule aligns to).
-
-#: Pairs-state schema: retained anchors (µs + event_id) and pending
-#: targets (µs + event_id). Anchors older than horizon + watermark
-#: delay evict — no pending or future target's frame reaches them —
-#: so per-key state is O(events inside horizon + watermark delay),
-#: Flink's NFA bound for a within-bounded followedByAny.
-PAIRS_STATE_SCHEMA = StructType(
-    [
-        StructField("anchor_us", ArrayType(LongType())),
-        StructField("anchor_id", ArrayType(LongType())),
-        StructField("target_us", ArrayType(LongType())),
-        StructField("target_id", ArrayType(LongType())),
-    ]
-)
-
-PAIRS_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("click_event", LongType()),
-        StructField("purchase_event", LongType()),
-        StructField("gap_us", LongType()),
-    ]
-)
-
-#: PAIRS_STATE_SCHEMA + the retained blocker events (middle
-#: negation); same eviction floor as anchors — unguarded pair
-#: patterns keep the base schema byte-identical.
-PAIRS_STATE_SCHEMA_BLK = StructType(
-    list(PAIRS_STATE_SCHEMA.fields)
-    + [
-        StructField("blocker_us", ArrayType(LongType())),
-        StructField("blocker_id", ArrayType(LongType())),
-    ]
-)
-
-
-def compile_pairs_stream(
-    anchor_cls: str,
-    target_cls: str,
-    horizon_us: int,
-    blocker_cls: str | None = None,
-):
-    """Handler for ``followedByAny`` pairing: each settling target
-    emits one row per retained anchor inside ``[t_us − horizon,
-    t_us)`` (the strict-below / inclusive-above frame of
-    compile_horizon_pairs, seen from the target side).
-
-    Resolution rule: a target settles once ``t_ms < wm_ms`` (STRICT)
-    — any unseen anchor has ``a_ms >= wm_ms > t_ms``, hence
-    ``a_us >= wm_ms·1000 > t_us``, strictly after the target and
-    outside its frame, so the pair set is complete. Anchors sort once
-    per invocation and each target takes its frame by two bisects
-    (the horizon machines' r13 resolution shape). Anchor eviction
-    floor: pending and future targets have ``t_us >= wm_ms·1000``,
-    so anchors below ``wm_ms·1000 − horizon_us`` are unreachable.
-
-    ``blocker_cls`` (middle negation — [FLINK-API] ``notFollowedBy``
-    BETWEEN steps): a settling target pairs only with anchors that
-    have NO blocker strictly between them in (us, id) event order —
-    two bisects over the once-sorted blocker buffer per candidate
-    pair. An unseen blocker has ``b_ms >= wm_ms > t_ms`` — after the
-    target, never between — so settlement stays complete; blockers
-    share the anchors' eviction floor. Unblocked patterns keep the
-    base state schema byte-identical."""
-
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            if blocker_cls is not None:
-                a_us, a_id, t_us, t_id, b_us, b_id = state.get
-                blockers = [
-                    (int(u), int(i)) for u, i in zip(b_us, b_id)
-                ]
-            else:
-                a_us, a_id, t_us, t_id = state.get
-                blockers = []
-            anchors = [(int(u), int(i)) for u, i in zip(a_us, a_id)]
-            targets = [(int(u), int(i)) for u, i in zip(t_us, t_id)]
-        else:
-            anchors, targets, blockers = [], [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, cls in zip(
-                    chunk["ts"], chunk["event_id"], chunk["event_type"]
-                ):
-                    us = int(ts.value) // 1_000
-                    if cls == anchor_cls:
-                        anchors.append((us, int(eid)))
-                    elif cls == target_cls:
-                        targets.append((us, int(eid)))
-                    elif cls == blocker_cls:
-                        blockers.append((us, int(eid)))
-        emitted, pending = [], []
-        anchors.sort()
-        blockers.sort()
-        a_keys = [a[0] for a in anchors]
-        for us, eid in targets:
-            if us // 1000 < wm_ms:
-                lo = bisect.bisect_left(a_keys, us - horizon_us)
-                hi = bisect.bisect_left(a_keys, us)
-                for a_u, a_i in anchors[lo:hi]:
-                    if blocker_cls is not None:
-                        # blockers strictly between (a_u, a_i) and
-                        # (us, eid) in (us, id) order — the prefix-
-                        # equality rule the batch join encodes
-                        blo = bisect.bisect_right(blockers, (a_u, a_i))
-                        bhi = bisect.bisect_left(blockers, (us, eid))
-                        if bhi > blo:
-                            continue
-                    emitted.append((key[0], a_i, eid, us - a_u))
-            else:
-                pending.append((us, eid))
-        floor_us = wm_ms * 1000 - horizon_us
-        anchors = [a for a in anchors if a[0] >= floor_us]
-        base = (
-            [u for u, _ in anchors],
-            [i for _, i in anchors],
-            [u for u, _ in pending],
-            [i for _, i in pending],
-        )
-        if blocker_cls is not None:
-            blockers = [b for b in blockers if b[0] >= floor_us]
-            base = base + (
-                [u for u, _ in blockers],
-                [i for _, i in blockers],
-            )
-        state.update(base)
-        if pending:
-            # shares hold_timer_ms's API-forced clamp residual (the
-            # wm_ms + 1 floor) — see its docstring for the boundary
-            state.setTimeoutTimestamp(
-                max(min(u for u, _ in pending) // 1000, wm_ms + 1)
-            )
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in emitted],
-                "click_event": [r[1] for r in emitted],
-                "purchase_event": [r[2] for r in emitted],
-                "gap_us": [r[3] for r in emitted],
-            }
-        )
-
-    return handler
-
-
 @query(
     "pattern_detect_followedbyany_stream",
     oracle="""
@@ -2159,163 +1723,11 @@ def pattern_detect_followedbyany_stream(
     the batch key's pair join + the ms-aligned
     settled-before-final-watermark filter on the purchase side.
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
+    ev = _class_events(spark, sf_dir, "click", "purchase")
+    return run_keyed(
+        spark, ev, "user_id",
+        *compile_pairs_stream("click", "purchase", 24 * _HOUR_US),
     )
-    handler = compile_pairs_stream(
-        "click", "purchase", 24 * 3600 * 1_000_000
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=PAIRS_OUT_SCHEMA,
-        stateStructType=PAIRS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
-
-
-# ---------------------------------------------------------------------------
-# Timed-out partial-match side output (Flink
-# ``TimedOutPartialMatchHandler``) — round 13. The inverse of the
-# run-fold automaton's emission rule: a row emits only when the
-# watermark proves the match can NO LONGER complete (deadline passed
-# with the funnel unfinished), so this is a pending-state machine in
-# the absence family — order-insensitive accumulation, resolution
-# strictly after the deadline, no hold-buffer fold.
-
-#: Timeout-state schema: pending pattern starts and the retained
-#: second/third-class events (µs + event_id parallel arrays each).
-#: Events below ``wm − horizon − 1ms`` evict (no pending or future
-#: start's frame reaches them), so per-key state is O(events inside
-#: horizon + watermark delay) — the NFA bound for a within-bounded
-#: three-step pattern.
-TIMEOUT_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", ArrayType(LongType())),
-        StructField("start_id", ArrayType(LongType())),
-        StructField("second_us", ArrayType(LongType())),
-        StructField("second_id", ArrayType(LongType())),
-        StructField("third_us", ArrayType(LongType())),
-        StructField("third_id", ArrayType(LongType())),
-    ]
-)
-
-TIMEOUT_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("start_event", LongType()),
-        StructField("n_matched", LongType()),
-        StructField("deadline_us", LongType()),
-    ]
-)
-
-
-def compile_timeout_stream(
-    first_cls: str, second_cls: str, third_cls: str, horizon_us: int
-):
-    """Handler for the timed-out-partials side output of ``first
-    followedBy second followedBy third within(horizon)``.
-
-    A start resolves once ``(start_us + horizon) // 1000 < wm_ms``
-    (STRICT) — any unseen event has ``ts_ms >= wm_ms``, hence
-    ``ts_us >= wm_ms·1000 > start_us + horizon``, beyond the
-    deadline, so the funnel's fate is fixed: the earliest
-    second-class event strictly after the start (in (us, id) total
-    order — the batch rn order restricted to these classes) within
-    the deadline, then the earliest third-class event strictly after
-    THAT one; complete → silent, else emit with n_matched = steps
-    matched at expiry. Resolution is deliberately deadline-time only
-    (never early on completion): an earlier second-class event can
-    still arrive in-watermark and shift the chain, and the event
-    buffers are retained for the horizon regardless — pending-start
-    state is O(starts in horizon), not the bottleneck. Both sides
-    sort once per invocation; each start resolves with two bisects.
-    """
-
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            s_us, s_id, b_us, b_id, c_us, c_id = state.get
-            starts = [(int(u), int(i)) for u, i in zip(s_us, s_id)]
-            seconds = [(int(u), int(i)) for u, i in zip(b_us, b_id)]
-            thirds = [(int(u), int(i)) for u, i in zip(c_us, c_id)]
-        else:
-            starts, seconds, thirds = [], [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, cls in zip(
-                    chunk["ts"], chunk["event_id"], chunk["event_type"]
-                ):
-                    us = int(ts.value) // 1_000
-                    if cls == first_cls:
-                        starts.append((us, int(eid)))
-                    elif cls == second_cls:
-                        seconds.append((us, int(eid)))
-                    elif cls == third_cls:
-                        thirds.append((us, int(eid)))
-        emitted, pending = [], []
-        seconds.sort()
-        thirds.sort()
-        for us, eid in starts:
-            deadline = us + horizon_us
-            if deadline // 1000 >= wm_ms:
-                pending.append((us, eid))
-                continue
-            i = bisect.bisect_right(seconds, (us, eid))
-            fc = (
-                seconds[i]
-                if i < len(seconds) and seconds[i][0] <= deadline
-                else None
-            )
-            if fc is None:
-                emitted.append((key[0], eid, 1, deadline))
-                continue
-            j = bisect.bisect_right(thirds, fc)
-            done = j < len(thirds) and thirds[j][0] <= deadline
-            if not done:
-                emitted.append((key[0], eid, 2, deadline))
-        # Exact eviction floor — same derivation as the absence
-        # machine's (a pending anchor's deadline // 1000 >= wm_ms is
-        # exactly us >= wm_ms*1000 − horizon_us; followers must sort
-        # at or after their anchor). ADVICE r13 item 4.
-        floor_us = wm_ms * 1000 - horizon_us
-        seconds = [e for e in seconds if e[0] >= floor_us]
-        thirds = [e for e in thirds if e[0] >= floor_us]
-        state.update(
-            (
-                [u for u, _ in pending],
-                [i for _, i in pending],
-                [u for u, _ in seconds],
-                [i for _, i in seconds],
-                [u for u, _ in thirds],
-                [i for _, i in thirds],
-            )
-        )
-        if pending:
-            # shares hold_timer_ms's API-forced clamp residual (the
-            # wm_ms + 1 floor) — see its docstring for the boundary
-            state.setTimeoutTimestamp(
-                max(
-                    min((u + horizon_us) // 1000 for u, _ in pending),
-                    wm_ms + 1,
-                )
-            )
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in emitted],
-                "start_event": [r[1] for r in emitted],
-                "n_matched": [r[2] for r in emitted],
-                "deadline_us": [r[3] for r in emitted],
-            }
-        )
-
-    return handler
 
 
 @query(
@@ -2375,23 +1787,11 @@ def pattern_timeout_partial_stream(
     deadline-strictly-passed filter (the absence machine's boundary
     polarity — this is a FOLLOWING-horizon resolution).
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("view", "click", "purchase"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
+    ev = _class_events(spark, sf_dir, "view", "click", "purchase")
+    return run_keyed(
+        spark, ev, "user_id",
+        *compile_timeout_stream("view", "click", "purchase", 6 * _HOUR_US),
     )
-    handler = compile_timeout_stream(
-        "view", "click", "purchase", 6 * 3600 * 1_000_000
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=TIMEOUT_OUT_SCHEMA,
-        stateStructType=TIMEOUT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
 
 
 @query(
@@ -2526,23 +1926,13 @@ def pattern_detect_followedby_nobetween_stream(
     oracle's final-watermark term includes error rows). Oracle = the
     batch prefix-equality join + the ms-aligned settled filter.
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("click", "purchase", "error"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
+    ev = _class_events(spark, sf_dir, "click", "purchase", "error")
+    return run_keyed(
+        spark, ev, "user_id",
+        *compile_pairs_stream(
+            "click", "purchase", 24 * _HOUR_US, blocker_cls="error",
+        ),
     )
-    handler = compile_pairs_stream(
-        "click", "purchase", 24 * 3600 * 1_000_000, blocker_cls="error"
-    )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=PAIRS_OUT_SCHEMA,
-        stateStructType=PAIRS_STATE_SCHEMA_BLK,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
 
 
 @query(
@@ -2715,7 +2105,7 @@ def pattern_match_finalguard_stream(
     )
 
 
-#: Suffix-automaton state (round 14 — per-EVENT anchoring): the last
+#: Suffix-automaton state (per-EVENT anchoring): the last
 #: W folded events (W = the pattern's event length − 1, +1 when the
 #: earliest step is exact and needs its far-boundary event) plus the
 #: watermark hold buffer. Unlike the run-fold machine there is no run
@@ -2745,35 +2135,31 @@ SUFFIX_STATE_SCHEMA_VAL = StructType(
 
 
 def compile_suffix_stream(pat: Pattern):
-    """Compile a FIXED-count pattern into a per-EVENT-anchored
-    ``applyInPandasWithState`` handler — the streaming image of
-    :func:`operators.cep.compile_suffix` (round 14; retires the last
-    'does not stream' line in the CEP inventory: the suffix-anchored
-    start that the run-fold machine's compression discards, carried
-    since round 12 as pattern_detect_cep's documented residual).
+    """Compile a FIXED-count pattern into the per-EVENT-anchored suffix
+    machine — the streaming image of :func:`operators.cep.compile_suffix`.
+    Returns ``(handler, out_schema, state_schema)``.
 
-    Per-event anchoring is trivially incremental: every predecessor a
-    suffix match reads sits at a FIXED lag offset, so a window of the
-    last W folded events (W = pattern event length − 1, +1 when the
-    earliest step carries ``exact``) decides each anchor the moment
-    the anchor itself folds — no deferral, no pend state, no variant
-    expansion. A shorter-than-W window means the far events simply do
-    not exist (key history shorter than the pattern), which is the
-    same NULL-lag semantics the batch plan has; an ``exact`` boundary
-    with no event beyond it passes, exactly like the batch plan's
-    ``guard.isNull() | ~matches`` disjunct. Guards aggregate over the
-    fixed offsets with the suffix route's NULL semantics
+    Every predecessor a suffix match reads sits at a fixed lag offset,
+    so a window of the last W folded events (W = pattern event length
+    − 1, +1 when the earliest step carries ``exact``) decides each
+    anchor the moment the anchor itself folds — no deferral, no pending
+    state, no variant expansion. A window shorter than W means the far
+    events do not exist (the batch plan's NULL-lag semantics); an
+    ``exact`` boundary with no event beyond it passes, like the batch
+    plan's ``guard.isNull() | ~matches`` disjunct. Guards aggregate
+    over the fixed offsets with the suffix route's NULL semantics
     (min/max/sum skip NULL values; all-NULL → NULL → no match).
 
-    Emission boundary: the anchor's own fold (``ts_ms <= wm_ms``,
-    split_by_watermark's admission) — the oracle is the batch SQL
-    plus the ms-aligned anchor-folded filter, the ORIGINAL run-fold
-    convention (no run-close shift: nothing here ranges over an open
-    run).
+    Emission boundary: the anchor's own fold (``ts_ms <= wm_ms``), so
+    the oracle is the batch SQL plus the ms-aligned anchor-folded
+    filter. Out columns: key, anchor_event, one (g_<name>,
+    g_<name>_ref) pair per guarded step, pattern_start_us,
+    pattern_end_us.
 
-    Returns ``(handler, out_schema, state_schema)``. Out columns:
-    key, anchor_event, one (g_<name>, g_<name>_ref) pair per guarded
-    step, pattern_start_us, pattern_end_us.
+    Rejected: a non-fixed quantifier, a final step of more than one
+    event or with ``exact`` (that would need a one-event lookahead past
+    the anchor), and skip strategies (they expand sub-matches through
+    the greedy strategy, :func:`compile_stream`).
     """
     if not all(s.fixed() for s in pat.steps):
         raise ValueError("suffix strategy requires fixed quantifiers")
@@ -2781,21 +2167,12 @@ def compile_suffix_stream(pat: Pattern):
     if last.min_count != 1:
         raise ValueError("suffix strategy anchors on a single final event")
     if last.exact:
-        # ADVICE r14 — mirror compile_suffix: the exact_guards walk
-        # covers steps[:-1] only, so a strict FINAL boundary (a
-        # one-event lookahead past the anchor) would compile silently
-        # unchecked; per-event anchoring decides each anchor on its
-        # predecessors alone, so reject rather than ignore.
         raise ValueError(
             "suffix streaming cannot enforce exact on the FINAL step "
             "(it would need a one-event lookahead past the anchor); "
             "use a run-anchored form (compile_stream run-close)"
         )
     if pat.skip != "past_last":
-        # mirror compile_pattern's routing contract: skip strategies
-        # compile through the greedy sub-match expansion, never the
-        # suffix path — compiling here would silently drop the
-        # start_off enumeration (review r14)
         raise ValueError(
             "suffix streaming supports only skip='past_last'; "
             "skip strategies expand sub-matches through the greedy "
@@ -2843,9 +2220,6 @@ def compile_suffix_stream(pat: Pattern):
         StructField("pattern_end_us", LongType()),
     ]
     out_schema = StructType(fields)
-    out_cols = [f.name for f in out_schema.fields]
-    ts_col, id_col, cls_col = pat.ts, pat.order_id, pat.cls_col
-    val_col = pat.val_col
 
     def _agg(vals, agg):
         """Values listed anchor-first (offset asc). Mirrors
@@ -2863,46 +2237,8 @@ def compile_suffix_stream(pat: Pattern):
             return max(nn)
         return sum(nn)
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def dec(v):
-            return None if v is None or v != v else float(v)
-
-        if state.exists:
-            if needs_val:
-                (w_us, w_id, w_cls, w_nul,
-                 b_id, b_us, b_cls, b_nul, w_val, b_val) = state.get
-            else:
-                (w_us, w_id, w_cls, w_nul,
-                 b_id, b_us, b_cls, b_nul) = state.get
-                w_val = b_val = None
-            win = [
-                (int(u), int(i), None if n else c,
-                 dec(w_val[j]) if needs_val else None)
-                for j, (u, i, c, n) in enumerate(
-                    zip(w_us, w_id, w_cls, w_nul)
-                )
-            ]
-            buf = [
-                (int(u), int(i), None if n else c,
-                 dec(b_val[j]) if needs_val else None)
-                for j, (u, i, c, n) in enumerate(
-                    zip(b_us, b_id, b_cls, b_nul)
-                )
-            ]
-        else:
-            win, buf = [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                ingest_chunk(
-                    buf, chunk, ts_col, id_col, cls_col,
-                    val_col if needs_val else None,
-                )
-        ready, hold = split_by_watermark(buf, wm_ms)
-        out = []
-        nan = float("nan")
+    def process(key, st, ready, wm_ms):
+        win, out = st["win"], []
         for us, eid, cls, val in ready:
             if cls is not None and cls in anchor_clses:
                 ok = True
@@ -2947,33 +2283,20 @@ def compile_suffix_stream(pat: Pattern):
                         gvals += [lhs, rhs]
                 if ok:
                     out.append(
-                        tuple([key[0], int(eid)] + gvals
+                        tuple([key, int(eid)] + gvals
                               + [int(start_us), int(us)])
                     )
             win.append((us, eid, cls, val))
             del win[: max(0, len(win) - w_len)]
-        base = (
-            [e[0] for e in win],
-            [e[1] for e in win],
-            ["" if e[2] is None else e[2] for e in win],
-            [1 if e[2] is None else 0 for e in win],
-            [e[1] for e in hold],
-            [e[0] for e in hold],
-            ["" if e[2] is None else e[2] for e in hold],
-            [1 if e[2] is None else 0 for e in hold],
-        )
-        if needs_val:
-            base = base + (
-                [nan if e[3] is None else float(e[3]) for e in win],
-                [nan if e[3] is None else float(e[3]) for e in hold],
-            )
-        state.update(base)
-        if hold:
-            state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        yield pd.DataFrame(
-            {c: [r[i] for r in out] for i, c in enumerate(out_cols)}
-        )
+        return out, None
 
+    cols = (
+        pat.ts, pat.order_id, pat.cls_col, pat.val_col if needs_val else None
+    )
+    handler = keyed_handler(
+        process, out_schema, state_schema, cols, {"win": HOLD_COLS},
+        hold=True,
+    )
     return handler, out_schema, state_schema
 
 
@@ -2995,15 +2318,7 @@ def suffix_pattern_stream(
         .withWatermark(pat.ts, watermark)
         .select(*cols)
     )
-    handler, out_schema, state_schema = compile_suffix_stream(pat)
-    result = ev.groupBy(pat.key).applyInPandasWithState(
-        handler,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
+    return run_keyed(spark, ev, pat.key, *compile_suffix_stream(pat))
 
 
 @query(

@@ -35,6 +35,7 @@ watermark), not just the final frontier.
 from __future__ import annotations
 
 import bisect
+import itertools
 import os
 import time
 from typing import Iterator
@@ -81,6 +82,18 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def _class_events(spark: SparkSession, sf_dir: str, *classes: str) -> DataFrame:
+    """The (user_id, ts, event_id, event_type) rows of ``classes`` as a
+    stream. The filter reaches the file scan, so only these rows
+    shuffle, and the watermark is declared after it, so it advances on
+    the MAX(ts) of the rows the keyed operator sees — the term the
+    filtered keys' oracles use."""
+    return (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type").isin(*classes))
+        .select("user_id", "ts", "event_id", "event_type")
+        .withWatermark("ts", "10 minutes")
+    )
 
 
 # Streaming state-store width DEFAULT: each shuffle partition owns a
@@ -144,21 +157,16 @@ def split_by_watermark(buf, wm_ms):
 
 def ingest_chunk(buf, chunk, ts_col, id_col, cls_col, val_col=None):
     """Append one ``applyInPandasWithState`` chunk to a handler's event
-    buffer as ``(ts_us, order_id, cls|None, val|None)`` tuples —
-    vectorized column decode (optimization r16, guide §4.2: the
-    per-row ``zip(chunk[ts], ...)`` walked pandas Series element-wise
-    with a per-event ``pd.Timestamp.value`` unbox + two ``pd.isna``
-    calls; whole-column ``astype/tolist`` builds the identical tuples
-    6× faster at 200 k rows — equality asserted against the old loop
-    at change time and pinned by the fake-GroupState fuzz harness).
-    Shared by the two throughput-gated CEP machines so the decode
-    contract lives in one place, like :func:`split_by_watermark`."""
+    buffer as ``(ts_us, order_id, cls|None, val|None)`` tuples, decoded
+    column-wise (no per-event ``pd.Timestamp`` unboxing). Every missing
+    class marker — None, NaN or the ``pd.NA`` of a nullable string
+    column — decodes to None, and so does a missing value."""
     uss = (chunk[ts_col].astype("int64") // 1_000).tolist()
     eids = chunk[id_col].tolist()
-    clss = [
-        None if c is None or (isinstance(c, float) and c != c) else c
-        for c in chunk[cls_col].tolist()
-    ]
+    cls_s = chunk[cls_col]
+    clss = cls_s.tolist()
+    if cls_s.hasnans:
+        clss = [None if m else c for c, m in zip(clss, cls_s.isna().tolist())]
     if val_col is None:
         vs = [None] * len(uss)
     else:
@@ -255,6 +263,185 @@ def run_to_memory(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(name)
+
+
+# ---------------------------------------------------------------------------
+# Keyed-state runtime: the Flink ``KeyedProcessFunction`` shape on top
+# of ``applyInPandasWithState``. A machine supplies one ``process``
+# step; the runtime owns the state codec, input decode, watermark
+# hold, timer clamp, output frame and launch.
+
+#: Row layout of the watermark hold buffer (``buf_*`` state arrays):
+#: the tuples :func:`ingest_chunk` builds.
+HOLD_COLS = ("us", "id", "cls", "val")
+
+
+def _state_codec(state_schema: StructType, tables: dict):
+    """``(fresh, decode, encode)`` between a state struct and the dict a
+    machine works on.
+
+    A field ``<t>_<c>`` of a table ``t`` in ``tables`` is column ``c``
+    of that table's parallel arrays; the dict holds the table as a list
+    of row tuples in ``tables[t]`` column order, with None for a column
+    the schema does not store. Every other field is a scalar entry
+    under its own name. A string field ``<p>_cls`` with an ``<p>_nul``
+    sibling stores NULL as ``''`` plus the flag; double fields store
+    NULL as NaN. The flag fields are derived and never appear in the
+    dict."""
+    types = {f.name: f.dataType for f in state_schema.fields}
+    names = list(types)
+    flagged = [
+        n for n in names if n.endswith("_cls") and n[:-3] + "nul" in types
+    ]
+    flags = {n[:-3] + "nul" for n in flagged}
+    arrays = {n for n, t in types.items() if isinstance(t, ArrayType)}
+    doubles = [
+        n for n, t in types.items()
+        if DoubleType() in (t, getattr(t, "elementType", None))
+    ]
+    table_fields = {
+        t: [(j, f"{t}_{c}") for j, c in enumerate(cols) if f"{t}_{c}" in types]
+        for t, cols in tables.items()
+    }
+    in_table = {n for fs in table_fields.values() for _, n in fs}
+    scalars = [n for n in names if n not in in_table and n not in flags]
+    nan = float("nan")
+
+    def fresh() -> dict:
+        st = dict.fromkeys(scalars)
+        st.update((t, []) for t in tables)
+        return st
+
+    def decode(row) -> dict:
+        v = dict(zip(names, row))
+        for n in flagged:
+            nul = v[n[:-3] + "nul"]
+            if n in arrays:
+                v[n] = [None if f else c for c, f in zip(v[n], nul)]
+            elif nul:
+                v[n] = None
+        for n in doubles:
+            x = v[n]
+            if n in arrays:
+                v[n] = [None if e is None or e != e else e for e in x]
+            elif x is not None and x != x:
+                v[n] = None
+        st = {n: v[n] for n in scalars}
+        for t, cols in tables.items():
+            slots = [None] * len(cols)
+            for j, n in table_fields[t]:
+                slots[j] = v[n]
+            st[t] = list(zip(*(
+                s if s is not None else itertools.repeat(None) for s in slots
+            )))
+        return st
+
+    def encode(st: dict) -> tuple:
+        v = {n: st[n] for n in scalars}
+        for t, fs in table_fields.items():
+            rows = st[t]
+            for j, n in fs:
+                v[n] = [r[j] for r in rows]
+        for n in flagged:
+            c = v[n]
+            if n in arrays:
+                v[n[:-3] + "nul"] = [1 if e is None else 0 for e in c]
+                v[n] = ["" if e is None else e for e in c]
+            else:
+                v[n[:-3] + "nul"] = 1 if c is None else 0
+                v[n] = "" if c is None else c
+        for n in doubles:
+            x = v[n]
+            if n in arrays:
+                v[n] = [nan if e is None else float(e) for e in x]
+            else:
+                v[n] = nan if x is None else float(x)
+        return tuple(v[n] for n in names)
+
+    return fresh, decode, encode
+
+
+def keyed_handler(process, out_schema, state_schema, cols, tables, hold=False):
+    """Build an ``applyInPandasWithState`` handler around one machine
+    step ``process(key, st, events, wm_ms) -> (rows, timer_ms)``.
+
+    - ``st`` is the key's state as a dict (see :func:`_state_codec`
+      for ``tables`` and the NULL encodings), fresh when the key has
+      none. The step mutates it in place; clearing it removes the
+      key's state.
+    - ``events`` are the invocation's input rows as :data:`HOLD_COLS`
+      tuples, decoded by :func:`ingest_chunk` from the ``(ts, id, cls,
+      val)`` column names in ``cols`` (``val`` may be None). With
+      ``hold=True`` the runtime keeps the watermark hold buffer as
+      table ``buf``: ``events`` are the rows the watermark has passed,
+      in ``(ts, id)`` order (:func:`split_by_watermark`), and
+      ``st["buf"]`` the held rest.
+    - ``rows`` are output tuples in ``out_schema`` order.
+    - ``timer_ms`` (or None) is the event-time deadline at which the
+      key must run again. The runtime arms the earlier of it and the
+      hold buffer's re-fold timer (:func:`hold_timer_ms`), clamped to
+      ``wm_ms + 1`` because Spark only accepts timeouts above the
+      current watermark. A deadline that the clamp raises fires one
+      watermark advance late; if the final watermark lands exactly on
+      it, that last firing never happens (the residual
+      :func:`hold_timer_ms` describes).
+
+    The handler stays a plain generator ``handler(key, pdfs, state)``.
+    """
+    if hold:
+        tables = {**tables, "buf": HOLD_COLS}
+    fresh, decode, encode = _state_codec(state_schema, tables)
+    out_cols = [f.name for f in out_schema.fields]
+
+    def handler(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        st = decode(state.get) if state.exists else fresh()
+        wm_ms = state.getCurrentWatermarkMs()
+        events = st["buf"] if hold else []
+        if not state.hasTimedOut:
+            for chunk in pdfs:
+                ingest_chunk(events, chunk, *cols)
+        if hold:
+            events, st["buf"] = split_by_watermark(events, wm_ms)
+        rows, timer = process(key[0], st, events, wm_ms)
+        if not st:
+            if state.exists:
+                state.remove()
+        else:
+            state.update(encode(st))
+            if hold and st["buf"]:
+                held = hold_timer_ms(st["buf"], wm_ms)
+                timer = held if timer is None else min(timer, held)
+            if timer is not None:
+                state.setTimeoutTimestamp(max(timer, wm_ms + 1))
+        yield pd.DataFrame(
+            {c: [r[i] for r in rows] for i, c in enumerate(out_cols)}
+        )
+
+    return handler
+
+
+def run_keyed(
+    spark: SparkSession,
+    ev: DataFrame,
+    key: str,
+    handler,
+    out_schema: StructType,
+    state_schema: StructType,
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """The launch every keyed machine shares: group ``ev`` by ``key``,
+    run ``handler`` with event-time timers in append mode, and drain
+    the result through :func:`run_to_memory`."""
+    result = ev.groupBy(key).applyInPandasWithState(
+        handler,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+    return run_to_memory(spark, result, mode="append", checkpoint=checkpoint)
 
 
 @query(
@@ -893,14 +1080,10 @@ def stateful_session_timeout_stream(spark: SparkSession, sf_dir: str) -> DataFra
             StructField("n", LongType()),
         ]
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        session_machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_keyed(
+        spark, ev, "user_id", session_machine,
+        out_schema, state_schema,
     )
-    return run_to_memory(spark, result, mode="append")
 
 
 #: Idle-key state TTL (Flink ``StateTtlConfig`` analogue): state not
@@ -1111,14 +1294,10 @@ def stateful_session_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id")
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        make_ttl_machine(),
-        outputStructType=_TTL_OUT_SCHEMA,
-        stateStructType=_TTL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_keyed(
+        spark, ev, "user_id", make_ttl_machine(),
+        _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA,
     )
-    return run_to_memory(spark, result, mode="append")
 
 
 # The streaming CEP automaton lives in cep_stream.py since round 12:
@@ -1968,14 +2147,10 @@ def run_topn_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
     stream (``ts`` stays in the projection solely to carry the
     watermark attribute to the stateful operator — dropping it raises
     "Event-time timeout not supported without watermark")."""
-    result = ev.groupBy("d_start").applyInPandasWithState(
-        compile_topn_stream(),
-        outputStructType=_TOPN_OUT_SCHEMA,
-        stateStructType=_TOPN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_keyed(
+        spark, ev, "d_start", compile_topn_stream(),
+        _TOPN_OUT_SCHEMA, _TOPN_STATE_SCHEMA,
     )
-    return run_to_memory(spark, result, mode="append")
 
 
 #: window_count_tumbling_stream keyed state: the open window's
@@ -2159,14 +2334,10 @@ def window_count_tumbling_stream(
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id", "value")
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_countwindow_stream(),
-        outputStructType=_COUNTWIN_OUT_SCHEMA,
-        stateStructType=_COUNTWIN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_keyed(
+        spark, ev, "user_id", compile_countwindow_stream(),
+        _COUNTWIN_OUT_SCHEMA, _COUNTWIN_STATE_SCHEMA,
     )
-    return run_to_memory(spark, result, mode="append")
 
 
 #: window_count_sliding_stream keyed state: folded-event position,
@@ -2335,14 +2506,10 @@ def window_count_sliding_stream(
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id", "value")
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_countwindow_sliding_stream(),
-        outputStructType=_COUNTSLIDE_OUT_SCHEMA,
-        stateStructType=_COUNTSLIDE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_keyed(
+        spark, ev, "user_id", compile_countwindow_sliding_stream(),
+        _COUNTSLIDE_OUT_SCHEMA, _COUNTSLIDE_STATE_SCHEMA,
     )
-    return run_to_memory(spark, result, mode="append")
 
 
 @query(
@@ -2587,20 +2754,10 @@ def join_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     = the batch as-of SQL + the ms-aligned settled-before-final-
     watermark filter on the error side.
     """
-    ev = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("click", "error"))
-        .select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", "10 minutes")
+    return run_keyed(
+        spark, _class_events(spark, sf_dir, "click", "error"), "user_id",
+        compile_asof_stream(), _ASOF_OUT_SCHEMA, _ASOF_STATE_SCHEMA,
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_asof_stream(),
-        outputStructType=_ASOF_OUT_SCHEMA,
-        stateStructType=_ASOF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
 
 
 @query(

@@ -242,6 +242,34 @@ def row_count(sf_dir: str, name: str) -> int:
 _VIEW_REGISTERED: dict[tuple[str, int, str, str], str] = {}
 
 
+def temp_view_ref(spark: SparkSession, sf_dir: str, prefix: str, build) -> str:
+    """FROM-able temp-view name ``<prefix>_<md5-16 of abspath(sf_dir)>``
+    over the DataFrame ``build()`` returns, registered once per
+    (application, session, dir, prefix) — the one registry behind every
+    single-``spark.sql``-statement reference. A hit is revalidated
+    against the catalog: an id()-reused dead session's entry names a
+    view only that session's catalog held. 64 md5 bits put a
+    cross-dir name collision (which revalidation cannot see) past
+    ~10^9 distinct dirs. :func:`invalidate` drops a dir's entries."""
+    import hashlib
+
+    key = (
+        spark.sparkContext.applicationId,
+        id(spark),
+        os.path.abspath(sf_dir),
+        prefix,
+    )
+    view = _VIEW_REGISTERED.get(key)
+    if view is not None and spark.catalog.tableExists(view):
+        return view
+    if len(_VIEW_REGISTERED) >= _CACHE_CAP:
+        _VIEW_REGISTERED.clear()
+    view = f"{prefix}_{hashlib.md5(key[2].encode()).hexdigest()[:16]}"
+    build().createOrReplaceTempView(view)
+    _VIEW_REGISTERED[key] = view
+    return view
+
+
 def table_sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
     """FROM-able SQL reference for a fixture table, for single-
     ``spark.sql``-statement queries (SCALING.md §12).
@@ -251,33 +279,13 @@ def table_sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
     SQL reuses the already-resolved file index + schema instead of the
     re-list + footer re-read a raw ``parquet.`path``` reference pays
     per occurrence (~0.10-0.19 s each — the dominant build term for
-    multi-table SQL bodies). Registration happens once per
-    (application, dir, table); layout knowledge stays in this module.
+    multi-table SQL bodies). Layout knowledge stays in this module.
     Because the view wraps ``table()``, events' ns→µs timestamp
     conversion rides along too.
     """
-    key = _resolve_key(spark, sf_dir, name)
-    view = _VIEW_REGISTERED.get(key)
-    # Revalidate catalog visibility even on a hit: the id()-keyed
-    # entry could (pathologically) have been registered by a dead
-    # session whose id() was reused, and the temp view lives in THAT
-    # session's catalog. One cheap catalog lookup per build removes
-    # the whole failure mode.
-    if view is not None and spark.catalog.tableExists(view):
-        return view
-    if len(_VIEW_REGISTERED) >= _CACHE_CAP:
-        _VIEW_REGISTERED.clear()
-    import hashlib
-
-    # 64 bits of md5 over the abspath (ADVICE r7): the former 32-bit
-    # crc32 made a silent cross-dir view collision merely improbable;
-    # a collision here rebinds the shared view name to another dir's
-    # data and tableExists revalidation cannot see it. 16 hex digits
-    # puts a birthday collision past ~10^9 distinct dirs.
-    view = f"flws_tab_{name}_{hashlib.md5(key[2].encode()).hexdigest()[:16]}"
-    table(spark, sf_dir, name).createOrReplaceTempView(view)
-    _VIEW_REGISTERED[key] = view
-    return view
+    return temp_view_ref(
+        spark, sf_dir, f"flws_tab_{name}", lambda: table(spark, sf_dir, name)
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -324,15 +324,6 @@ def test_pending_state_machines_fuzz_match_bruteforce():
     applyInPandasWithState CEP machine in the module now has a
     randomized multi-batch handler-level sweep (round 14)."""
     from flink_large_window_spark.streaming.cep_stream import (
-        ABSENCE_OUT_SCHEMA,
-        ABSENCE_STATE_SCHEMA,
-        HORIZON_OUT_SCHEMA,
-        HORIZON_STATE_SCHEMA,
-        PAIRS_OUT_SCHEMA,
-        PAIRS_STATE_SCHEMA,
-        PAIRS_STATE_SCHEMA_BLK,
-        TIMEOUT_OUT_SCHEMA,
-        TIMEOUT_STATE_SCHEMA,
         compile_absence_stream,
         compile_horizon_count_stream,
         compile_pairs_stream,
@@ -363,9 +354,8 @@ def test_pending_state_machines_fuzz_match_bruteforce():
         rows = keep({"click", "purchase"})
         got_raw, wm = _replay(
             rows, pat, n_batches, 41,
-            compile_fn=lambda _p: (
-                compile_absence_stream("click", "purchase", h),
-                ABSENCE_OUT_SCHEMA, ABSENCE_STATE_SCHEMA,
+            compile_fn=lambda _p: compile_absence_stream(
+                "click", "purchase", h
             ),
         )
         got = {(r[0], r[1]) for r in got_raw}
@@ -396,9 +386,8 @@ def test_pending_state_machines_fuzz_match_bruteforce():
         # --- preceding-horizon count: >= 2 clicks in [p-6h, p] ---
         got_raw, wm = _replay(
             rows, pat, n_batches, 43,
-            compile_fn=lambda _p: (
-                compile_horizon_count_stream("purchase", "click", h, 2),
-                HORIZON_OUT_SCHEMA, HORIZON_STATE_SCHEMA,
+            compile_fn=lambda _p: compile_horizon_count_stream(
+                "purchase", "click", h, 2
             ),
         )
         got = {(r[0], r[1], r[2]) for r in got_raw}
@@ -418,17 +407,12 @@ def test_pending_state_machines_fuzz_match_bruteforce():
 
         # --- pairs (followedByAny), with and without a blocker ---
         rows3 = keep({"click", "purchase", "error"})
-        for blocker, st_schema in (
-            (None, PAIRS_STATE_SCHEMA),
-            ("error", PAIRS_STATE_SCHEMA_BLK),
-        ):
+        for blocker in (None, "error"):
             src = rows if blocker is None else rows3
             got_raw, wm = _replay(
                 src, pat, n_batches, 47,
-                compile_fn=lambda _p, b=blocker, s=st_schema: (
-                    compile_pairs_stream("click", "purchase", h,
-                                         blocker_cls=b),
-                    PAIRS_OUT_SCHEMA, s,
+                compile_fn=lambda _p, b=blocker: compile_pairs_stream(
+                    "click", "purchase", h, blocker_cls=b
                 ),
             )
             got = {tuple(r) for r in got_raw}
@@ -449,9 +433,8 @@ def test_pending_state_machines_fuzz_match_bruteforce():
         rows4 = keep({"view", "click", "purchase"})
         got_raw, wm = _replay(
             rows4, pat, n_batches, 53,
-            compile_fn=lambda _p: (
-                compile_timeout_stream("view", "click", "purchase", h),
-                TIMEOUT_OUT_SCHEMA, TIMEOUT_STATE_SCHEMA,
+            compile_fn=lambda _p: compile_timeout_stream(
+                "view", "click", "purchase", h
             ),
         )
         got = {tuple(r) for r in got_raw}

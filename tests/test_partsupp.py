@@ -133,22 +133,19 @@ def test_partsupp_three_forms_identical(spark):
     transitively by the quartet's oracle hash checks)."""
     from flink_large_window_spark.operators.tpch import _partsupp_spark_cte
 
-    sql_rows = sorted(
-        map(
-            tuple,
-            spark.sql(
-                "WITH " + _partsupp_spark_cte(spark, SF_ORACLE)
-                + " SELECT ps_partkey, ps_suppkey, ps_availqty,"
-                " ps_cost_cents FROM partsupp"
-            ).collect(),
-        )
+    sql_df = spark.sql(
+        "WITH " + _partsupp_spark_cte(spark, SF_ORACLE)
+        + " SELECT ps_partkey, ps_suppkey, ps_availqty,"
+        " ps_cost_cents FROM partsupp"
     )
-    df_rows = sorted(
-        map(
-            tuple,
-            derived_partsupp(spark, SF_ORACLE)
-            .select("ps_partkey", "ps_suppkey", "ps_availqty", "ps_cost_cents")
-            .collect(),
-        )
+    df_df = derived_partsupp(spark, SF_ORACLE).select(
+        "ps_partkey", "ps_suppkey", "ps_availqty", "ps_cost_cents"
     )
+    assert sql_df.schema == df_df.schema
+    assert (
+        sql_df.limit(0).toPandas().dtypes.to_dict()
+        == df_df.limit(0).toPandas().dtypes.to_dict()
+    )
+    sql_rows = sorted(map(tuple, sql_df.collect()))
+    df_rows = sorted(map(tuple, df_df.collect()))
     assert sql_rows == df_rows

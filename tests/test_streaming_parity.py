@@ -866,9 +866,8 @@ def _run_compiled_split_stream(spark, d, pat, idle_evict=False):
     from flink_large_window_spark.streaming.cep_stream import (
         compile_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
+    from flink_large_window_spark.streaming.streams import run_keyed
     from flink_large_window_spark.tables import prep
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     prep(spark)
     guarded = any(s.guard is not None for s in pat.steps)
@@ -889,14 +888,10 @@ def _run_compiled_split_stream(spark, d, pat, idle_evict=False):
     handler, out_schema, state_schema = compile_stream(
         pat, idle_evict=idle_evict
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_keyed(
+        spark, ev, "user_id", handler,
+        out_schema, state_schema,
     )
-    return run_to_memory(spark, result, mode="append")
 
 
 @pytest.mark.parametrize("n_files", [2, 3])
@@ -1152,9 +1147,8 @@ def test_state_ttl_evicts_idle_keys(spark, tmp_path):
         _TTL_OUT_SCHEMA,
         _TTL_STATE_SCHEMA,
         make_ttl_machine,
-        run_to_memory,
+        run_keyed,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     batch1 = [
         _event_row(1, 0, 0, "view"),
@@ -1180,14 +1174,10 @@ def test_state_ttl_evicts_idle_keys(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        make_ttl_machine(),
-        outputStructType=_TTL_OUT_SCHEMA,
-        stateStructType=_TTL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = run_keyed(
+        spark, ev, "user_id", make_ttl_machine(),
+        _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA,
     )
-    out = run_to_memory(spark, result, mode="append")
     got = {
         (r["user_id"], r["evict_at_us"], r["last_seen_us"], r["n_discarded"])
         for r in out.collect()
@@ -1417,12 +1407,9 @@ def _run_absence_split_stream(spark, d):
     pattern_detect_notfollowedby_stream builds (filter BEFORE the
     watermark declaration), pointed at a split directory."""
     from flink_large_window_spark.streaming.cep_stream import (
-        ABSENCE_OUT_SCHEMA,
-        ABSENCE_STATE_SCHEMA,
         compile_absence_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.streams import run_keyed
 
     schema = "user_id long, ts timestamp, event_id long, event_type string"
     stream = (
@@ -1436,17 +1423,10 @@ def _run_absence_split_stream(spark, d):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_absence_stream(
-        "click", "purchase", 6 * 3600 * 1_000_000
+    return run_keyed(
+        spark, ev, "user_id",
+        *compile_absence_stream("click", "purchase", 6 * 3600 * 1_000_000),
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=ABSENCE_OUT_SCHEMA,
-        stateStructType=ABSENCE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return run_to_memory(spark, result, mode="append")
 
 
 def test_absence_stream_parity(spark):
@@ -1507,12 +1487,9 @@ def test_pairs_stream_multibatch_out_of_order(spark, tmp_path):
     the same click — the every-alternative semantics followedBy
     deliberately lacks."""
     from flink_large_window_spark.streaming.cep_stream import (
-        PAIRS_OUT_SCHEMA,
-        PAIRS_STATE_SCHEMA,
         compile_pairs_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.streams import run_keyed
 
     batch1 = [
         _event_row(1, 0, 0, "click"),
@@ -1543,15 +1520,10 @@ def test_pairs_stream_multibatch_out_of_order(spark, tmp_path):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_pairs_stream("click", "purchase", 24 * 3600 * 1_000_000)
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=PAIRS_OUT_SCHEMA,
-        stateStructType=PAIRS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = run_keyed(
+        spark, ev, "user_id",
+        *compile_pairs_stream("click", "purchase", 24 * 3600 * 1_000_000),
     )
-    out = run_to_memory(spark, result, mode="append")
     got = {
         (r["user_id"], r["click_event"], r["purchase_event"], r["gap_us"])
         for r in out.collect()
@@ -1876,9 +1848,8 @@ def test_countwindow_sliding_stream_multibatch(spark, tmp_path):
         _COUNTSLIDE_OUT_SCHEMA,
         _COUNTSLIDE_STATE_SCHEMA,
         compile_countwindow_sliding_stream,
-        run_to_memory,
+        run_keyed,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     vals = {0: 1.0, 1: 2.0, 2: None, 3: 4.0, 4: 5.0, 5: 6.0,
             6: 7.0, 7: 8.0}
@@ -1900,14 +1871,10 @@ def test_countwindow_sliding_stream_multibatch(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_countwindow_sliding_stream(),
-        outputStructType=_COUNTSLIDE_OUT_SCHEMA,
-        stateStructType=_COUNTSLIDE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = run_keyed(
+        spark, ev, "user_id", compile_countwindow_sliding_stream(),
+        _COUNTSLIDE_OUT_SCHEMA, _COUNTSLIDE_STATE_SCHEMA,
     )
-    out = run_to_memory(spark, result, mode="append")
     got = {
         (r["user_id"], r["window_idx"], r["n"], r["sum_value"])
         for r in out.collect()
@@ -1928,12 +1895,9 @@ def test_pairs_nobetween_stream_multibatch(spark, tmp_path):
     (click@10 -> p@30); click@20 (after the error) still pairs.
     uid 5: error AFTER the purchase blocks nothing."""
     from flink_large_window_spark.streaming.cep_stream import (
-        PAIRS_OUT_SCHEMA,
-        PAIRS_STATE_SCHEMA_BLK,
         compile_pairs_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.streams import run_keyed
 
     batch1 = [
         _event_row(1, 0, 0, "click"),
@@ -1963,17 +1927,12 @@ def test_pairs_nobetween_stream_multibatch(spark, tmp_path):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_pairs_stream(
-        "click", "purchase", 24 * 3600 * 1_000_000, blocker_cls="error"
+    out = run_keyed(
+        spark, ev, "user_id",
+        *compile_pairs_stream(
+            "click", "purchase", 24 * 3600 * 1_000_000, blocker_cls="error"
+        ),
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=PAIRS_OUT_SCHEMA,
-        stateStructType=PAIRS_STATE_SCHEMA_BLK,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
     got = {
         (r["user_id"], r["click_event"], r["purchase_event"])
         for r in out.collect()
@@ -1993,12 +1952,9 @@ def test_timeout_partials_stream_multibatch(spark, tmp_path):
     (7) click arrives out-of-order AFTER its purchase in arrival
         order but in-watermark -> the chain still completes, silent."""
     from flink_large_window_spark.streaming.cep_stream import (
-        TIMEOUT_OUT_SCHEMA,
-        TIMEOUT_STATE_SCHEMA,
         compile_timeout_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.streams import run_keyed
 
     batch1 = [
         _event_row(1, 0, 0, "view"),
@@ -2034,17 +1990,12 @@ def test_timeout_partials_stream_multibatch(spark, tmp_path):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_timeout_stream(
-        "view", "click", "purchase", 6 * 3600 * 1_000_000
+    out = run_keyed(
+        spark, ev, "user_id",
+        *compile_timeout_stream(
+            "view", "click", "purchase", 6 * 3600 * 1_000_000
+        ),
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=TIMEOUT_OUT_SCHEMA,
-        stateStructType=TIMEOUT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
     got = {
         (r["user_id"], r["start_event"], r["n_matched"])
         for r in out.collect()
@@ -2174,9 +2125,8 @@ def _run_countwin_split_stream(spark, d):
         _COUNTWIN_OUT_SCHEMA,
         _COUNTWIN_STATE_SCHEMA,
         compile_countwindow_stream,
-        run_to_memory,
+        run_keyed,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     schema = (
         "user_id long, ts timestamp, event_id long, value double"
@@ -2190,14 +2140,10 @@ def _run_countwin_split_stream(spark, d):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_countwindow_stream(),
-        outputStructType=_COUNTWIN_OUT_SCHEMA,
-        stateStructType=_COUNTWIN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_keyed(
+        spark, ev, "user_id", compile_countwindow_stream(),
+        _COUNTWIN_OUT_SCHEMA, _COUNTWIN_STATE_SCHEMA,
     )
-    return run_to_memory(spark, result, mode="append")
 
 
 def test_countwindow_stream_multibatch_and_order(spark, tmp_path):
@@ -2351,9 +2297,8 @@ def _run_asof_split_stream(spark, d):
         _ASOF_OUT_SCHEMA,
         _ASOF_STATE_SCHEMA,
         compile_asof_stream,
-        run_to_memory,
+        run_keyed,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     schema = "user_id long, ts timestamp, event_id long, event_type string"
     stream = (
@@ -2367,14 +2312,10 @@ def _run_asof_split_stream(spark, d):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        compile_asof_stream(),
-        outputStructType=_ASOF_OUT_SCHEMA,
-        stateStructType=_ASOF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return run_keyed(
+        spark, ev, "user_id", compile_asof_stream(),
+        _ASOF_OUT_SCHEMA, _ASOF_STATE_SCHEMA,
     )
-    return run_to_memory(spark, result, mode="append")
 
 
 def test_asof_stream_multibatch(spark, tmp_path):
@@ -2482,12 +2423,9 @@ def test_followedby_stream_multibatch(spark, tmp_path):
     while one just outside does not — the emitted count pins exact
     frame membership."""
     from flink_large_window_spark.streaming.cep_stream import (
-        HORIZON_OUT_SCHEMA,
-        HORIZON_STATE_SCHEMA,
         compile_horizon_count_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_large_window_spark.streaming.streams import run_keyed
 
     d = _write_batches(
         tmp_path,
@@ -2523,17 +2461,12 @@ def test_followedby_stream_multibatch(spark, tmp_path):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    handler = compile_horizon_count_stream(
-        "purchase", "click", 6 * 3600 * 1_000_000, 2
+    out = run_keyed(
+        spark, ev, "user_id",
+        *compile_horizon_count_stream(
+            "purchase", "click", 6 * 3600 * 1_000_000, 2
+        ),
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=HORIZON_OUT_SCHEMA,
-        stateStructType=HORIZON_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    out = run_to_memory(spark, result, mode="append")
     got = {
         (r["user_id"], r["purchase_event"], r["clicks_6h"])
         for r in out.collect()
@@ -2577,9 +2510,8 @@ def test_ttl_out_of_order_within_watermark_does_not_fabricate_eviction(
         _TTL_OUT_SCHEMA,
         _TTL_STATE_SCHEMA,
         make_ttl_machine,
-        run_to_memory,
+        run_keyed,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     d = _write_batches(
         tmp_path,
@@ -2600,14 +2532,10 @@ def test_ttl_out_of_order_within_watermark_does_not_fabricate_eviction(
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        make_ttl_machine(),
-        outputStructType=_TTL_OUT_SCHEMA,
-        stateStructType=_TTL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = run_keyed(
+        spark, ev, "user_id", make_ttl_machine(),
+        _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA,
     )
-    out = run_to_memory(spark, result, mode="append")
     got = {
         (r["user_id"], r["evict_at_us"], r["last_seen_us"], r["n_discarded"])
         for r in out.collect()
@@ -2639,9 +2567,8 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
         _COUNTWIN_STATE_SCHEMA,
         compile_countwindow_stream,
         run_topn_stream,
-        run_to_memory,
+        run_keyed,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     t0 = dt.datetime(2024, 3, 1, 0, 0, 0)
     schema = pa.schema(
@@ -2717,14 +2644,10 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
     ev2 = stream2.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
-    cw = ev2.groupBy("user_id").applyInPandasWithState(
-        compile_countwindow_stream(),
-        outputStructType=_COUNTWIN_OUT_SCHEMA,
-        stateStructType=_COUNTWIN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = run_keyed(
+        spark, ev2, "user_id", compile_countwindow_stream(),
+        _COUNTWIN_OUT_SCHEMA, _COUNTWIN_STATE_SCHEMA,
     )
-    out = run_to_memory(spark, cw, mode="append")
     cw_got = {
         (r["user_id"], r["window_idx"], r["sum_value"])
         for r in out.collect()
@@ -2764,9 +2687,8 @@ def test_ttl_held_successor_does_not_evict(spark, tmp_path):
         _TTL_OUT_SCHEMA,
         _TTL_STATE_SCHEMA,
         make_ttl_machine,
-        run_to_memory,
+        run_keyed,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     d = _write_batches(
         tmp_path,
@@ -2791,14 +2713,10 @@ def test_ttl_held_successor_does_not_evict(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        make_ttl_machine(),
-        outputStructType=_TTL_OUT_SCHEMA,
-        stateStructType=_TTL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = run_keyed(
+        spark, ev, "user_id", make_ttl_machine(),
+        _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA,
     )
-    out = run_to_memory(spark, result, mode="append")
     got = {
         (r["user_id"], r["evict_at_us"], r["last_seen_us"], r["n_discarded"])
         for r in out.collect()
@@ -2829,11 +2747,10 @@ def test_ttl_held_successor_tail_case(spark, tmp_path):
         _TTL_OUT_SCHEMA,
         _TTL_STATE_SCHEMA,
         make_ttl_machine,
-        run_to_memory,
+        run_keyed,
     )
     from flink_large_window_spark import api
     import __spark_entry__ as entry_mod
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     d = _write_batches(
         tmp_path,
@@ -2854,14 +2771,10 @@ def test_ttl_held_successor_tail_case(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    result = ev.groupBy("user_id").applyInPandasWithState(
-        make_ttl_machine(),
-        outputStructType=_TTL_OUT_SCHEMA,
-        stateStructType=_TTL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = run_keyed(
+        spark, ev, "user_id", make_ttl_machine(),
+        _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA,
     )
-    out = run_to_memory(spark, result, mode="append")
     assert out.count() == 0, out.collect()
     # and the ORACLE on the same events agrees (this is the cell the
     # pre-fix oracle got wrong)
@@ -3231,9 +3144,8 @@ def test_state_reader_decodes_cep_automaton_state(spark):
     from flink_large_window_spark.streaming.cep_stream import compile_stream
     from flink_large_window_spark.streaming.streams import (
         _events_stream,
-        run_to_memory,
+        run_keyed,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     pat = Pattern(
         steps=(
@@ -3242,21 +3154,15 @@ def test_state_reader_decodes_cep_automaton_state(spark):
         ),
         within_hours=24,
     )
-    handler, out_schema, state_schema = compile_stream(pat)
     ev = (
         _events_stream(spark, SF_SMOKE)
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id", "event_type")
     )
-    res = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
     ckpt = tempfile.mkdtemp(prefix="flws_test_cepstate_")
-    run_to_memory(spark, res, mode="append", checkpoint=ckpt)
+    run_keyed(
+        spark, ev, "user_id", *compile_stream(pat), checkpoint=ckpt
+    )
 
     st = spark.read.format("statestore").option("path", ckpt).load()
     got = {}
@@ -3355,9 +3261,8 @@ def test_suffix_stream_window_straddles_batches(spark, tmp_path):
     from flink_large_window_spark.streaming.cep_stream import (
         compile_suffix_stream,
     )
-    from flink_large_window_spark.streaming.streams import run_to_memory
+    from flink_large_window_spark.streaming.streams import run_keyed
     from flink_large_window_spark.tables import prep
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     pat = Pattern(
         steps=(Step("clicks", "click", 2, 2), Step("buy", "purchase")),
@@ -3395,14 +3300,10 @@ def test_suffix_stream_window_straddles_batches(spark, tmp_path):
         .parquet(d)
     )
     ev = stream.withWatermark("ts", "10 minutes")
-    res = ev.groupBy("user_id").applyInPandasWithState(
-        handler,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    out = run_keyed(
+        spark, ev, "user_id", handler,
+        out_schema, state_schema,
     )
-    out = run_to_memory(spark, res, mode="append")
     got = {(r["user_id"], r["anchor_event"]) for r in out.collect()}
     assert got == {(1, 12), (2, 23)}, got
 
@@ -3461,9 +3362,8 @@ def test_runclose_pend_blocks_idle_evict_until_closing_fold(
     )
     from flink_large_window_spark.streaming.streams import (
         LAST_STATE_METRICS,
-        run_to_memory,
+        run_keyed,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
     import flink_large_window_spark.streaming.streams as S
 
     pat = Pattern(
@@ -3509,14 +3409,10 @@ def test_runclose_pend_blocks_idle_evict_until_closing_fold(
             .parquet(d)
         )
         ev = stream.withWatermark("ts", "10 minutes")
-        res = ev.groupBy("user_id").applyInPandasWithState(
-            handler,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        out = run_keyed(
+            spark, ev, "user_id", handler,
+            out_schema, state_schema,
         )
-        out = run_to_memory(spark, res, mode="append")
         rows = {
             (r["user_id"], r["anchor_event"], r["n_views"], r["n_clicks"])
             for r in out.collect()
