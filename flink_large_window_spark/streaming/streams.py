@@ -38,6 +38,7 @@ import bisect
 import itertools
 import os
 import time
+from collections import Counter
 from typing import Iterator
 
 import pandas as pd
@@ -155,21 +156,24 @@ def split_by_watermark(buf, wm_ms):
     return ready, hold
 
 
-def ingest_chunk(buf, chunk, ts_col, id_col, cls_col, val_col=None):
+def ingest_chunk(buf, chunk, ts_col, id_col, cls_col=None, val_col=None):
     """Append one ``applyInPandasWithState`` chunk to a handler's event
     buffer as ``(ts_us, order_id, cls|None, val|None)`` tuples, decoded
     column-wise (no per-event ``pd.Timestamp`` unboxing). Every missing
     class marker — None, NaN or the ``pd.NA`` of a nullable string
-    column — decodes to None, and so does a missing value."""
+    column — decodes to None, and so does a missing value. With
+    ``cls_col`` or ``val_col`` None, that field is None throughout."""
     uss = (chunk[ts_col].astype("int64") // 1_000).tolist()
     eids = chunk[id_col].tolist()
-    cls_s = chunk[cls_col]
-    clss = cls_s.tolist()
-    if cls_s.hasnans:
-        clss = [None if m else c for c, m in zip(clss, cls_s.isna().tolist())]
-    if val_col is None:
-        vs = [None] * len(uss)
-    else:
+    clss = vs = itertools.repeat(None)
+    if cls_col is not None:
+        cls_s = chunk[cls_col]
+        clss = cls_s.tolist()
+        if cls_s.hasnans:
+            clss = [
+                None if m else c for c, m in zip(clss, cls_s.isna().tolist())
+            ]
+    if val_col is not None:
         vs = [
             None if v != v else v
             for v in chunk[val_col]
@@ -371,11 +375,12 @@ def keyed_handler(process, out_schema, state_schema, cols, tables, hold=False):
       key's state.
     - ``events`` are the invocation's input rows as :data:`HOLD_COLS`
       tuples, decoded by :func:`ingest_chunk` from the ``(ts, id, cls,
-      val)`` column names in ``cols`` (``val`` may be None). With
-      ``hold=True`` the runtime keeps the watermark hold buffer as
-      table ``buf``: ``events`` are the rows the watermark has passed,
-      in ``(ts, id)`` order (:func:`split_by_watermark`), and
-      ``st["buf"]`` the held rest.
+      val)`` column names in ``cols`` (``cls`` and ``val`` may be
+      None). With ``hold=True`` the runtime keeps the watermark hold
+      buffer as table ``buf``: ``events`` are the rows the watermark
+      has passed, in ``(ts, id)`` order (:func:`split_by_watermark`),
+      and ``st["buf"]`` the held rest. Without it they are in arrival
+      order.
     - ``rows`` are output tuples in ``out_schema`` order.
     - ``timer_ms`` (or None) is the event-time deadline at which the
       key must run again. The runtime arms the earlier of it and the
@@ -564,16 +569,46 @@ def watermark_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(spark, dedup, mode="append")
 
 
-_STATE_SCHEMA = StructType(
-    [StructField("seg", LongType()), StructField("cnt", LongType())]
-)
-_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_id", LongType()),
-        StructField("n_since_signup", IntegerType()),
-    ]
-)
+def compile_count_session_stream():
+    """Handler for the per-user event count since the last ``signup``
+    (a ``KeyedProcessFunction`` with one ``ValueState``). Returns
+    ``(handler, out_schema, state_schema)``.
+
+    Each invocation sorts all of its events once by ``(ts, event_id)``
+    (the chunks of one invocation carry no order between them) and
+    folds them into the ``(seg, cnt)`` counter, emitting every event
+    with its running count. It never arms a timer. An event that
+    arrives in a later micro-batch than a newer event of its key folds
+    after it; the batch key stateful_count_session is the
+    order-insensitive ground truth."""
+    out_schema = StructType(
+        [
+            StructField("user_id", LongType()),
+            StructField("event_id", LongType()),
+            StructField("n_since_signup", IntegerType()),
+        ]
+    )
+    state_schema = StructType(
+        [StructField("seg", LongType()), StructField("cnt", LongType())]
+    )
+
+    def process(key, st, events, wm_ms):
+        seg, cnt = st["seg"] or 0, st["cnt"] or 0
+        rows = []
+        for _, eid, cls, _ in sorted(events, key=lambda e: e[:2]):
+            if cls == "signup":
+                seg, cnt = seg + 1, 1
+            else:
+                cnt += 1
+            rows.append((key, eid, cnt))
+        st.update(seg=seg, cnt=cnt)
+        return rows, None
+
+    handler = keyed_handler(
+        process, out_schema, state_schema,
+        ("ts", "event_id", "event_type", None), {},
+    )
+    return handler, out_schema, state_schema
 
 
 @query(
@@ -595,58 +630,10 @@ _OUT_SCHEMA = StructType(
     """,
 )
 def stateful_count_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of stateful_count_session via applyInPandasWithState.
-
-    The state function is a closure so cloudpickle ships it by value —
-    Spark's Python workers must not need this package on their import
-    path (the grading driver may run from any cwd).
-    """
-
-    def count_since_signup(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Keyed state machine (KeyedProcessFunction + ValueState
-        analogue): counter per user resetting at each 'signup' event.
-
-        Correct only under per-key event-time order within the replay;
-        the batch oracle (stateful_count_session) is the
-        order-insensitive ground truth.
-        """
-        (seg, cnt) = state.get if state.exists else (0, 0)
-        outs = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            res = []
-            for et, eid in zip(pdf["event_type"], pdf["event_id"]):
-                if et == "signup":
-                    seg, cnt = seg + 1, 1
-                else:
-                    cnt += 1
-                res.append((int(eid), cnt))
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "user_id": pdf["user_id"].iloc[0],
-                        "event_id": [r[0] for r in res],
-                        "n_since_signup": [r[1] for r in res],
-                    }
-                )
-            )
-        state.update((seg, cnt))
-        yield from outs
-
+    """Streaming twin of stateful_count_session on the keyed runtime
+    (:func:`compile_count_session_stream`)."""
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    out = (
-        ev.groupBy("user_id")
-        .applyInPandasWithState(
-            count_since_signup,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    return run_to_memory(spark, out, mode="append")
+    return run_keyed(spark, ev, "user_id", *compile_count_session_stream())
 
 
 @query(
@@ -834,7 +821,7 @@ def _stateful_count_session_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
     out = ev.groupBy("user_id").transformWithStateInPandas(
         CountSinceSignup(),
-        outputStructType=_OUT_SCHEMA,
+        outputStructType=compile_count_session_stream()[1],
         outputMode="append",
         timeMode="none",
     )
@@ -966,6 +953,57 @@ def join_window_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SESSION_GAP_US = 30 * 60 * 1_000_000
 
 
+def compile_session_timeout_stream():
+    """Handler for gap sessions closed by an event-time timer (the
+    Flink ``KeyedProcessFunction`` + ``registerEventTimeTimer``
+    pattern that the built-in ``session_window`` hides). Returns
+    ``(handler, out_schema, state_schema)``.
+
+    Per user the state is the open session ``(start, last, n)`` in µs.
+    Each invocation sorts its events once by ``(ts, event_id)``; an
+    event less than 30 min after ``last`` extends the session, a larger
+    gap emits the finished session and starts a new one. The step asks
+    to run again at the gap deadline ``(last + gap) // 1000``; once the
+    watermark strictly passes it (``deadline < wm_ms``, Spark's
+    event-time timeout rule) the session is emitted with no new input
+    and the key's state removed. Sessions still open when a bounded
+    replay ends stay unemitted."""
+    out_schema = StructType(
+        [
+            StructField(c, LongType())
+            for c in ("user_id", "session_start_us", "last_ts_us", "n_events")
+        ]
+    )
+    state_schema = StructType(
+        [StructField(c, LongType()) for c in ("start", "last", "n")]
+    )
+
+    def process(key, st, events, wm_ms):
+        start, last, n = st["start"], st["last"], st["n"]
+        rows = []
+        for us, _, _, _ in sorted(events, key=lambda e: e[:2]):
+            if start is None:
+                start, last, n = us, us, 1
+            elif us - last < _SESSION_GAP_US:
+                last, n = us, n + 1
+            else:
+                rows.append((key, start, last, n))
+                start, last, n = us, us, 1
+        if start is not None:
+            deadline = (last + _SESSION_GAP_US) // 1000
+            if deadline >= wm_ms:
+                st.update(start=start, last=last, n=n)
+                return rows, deadline
+            rows.append((key, start, last, n))
+        st.clear()
+        return rows, None
+
+    handler = keyed_handler(
+        process, out_schema, state_schema, ("ts", "event_id", None, None), {}
+    )
+    return handler, out_schema, state_schema
+
+
 @query(
     "stateful_session_timeout_stream",
     oracle="""
@@ -1003,87 +1041,15 @@ _SESSION_GAP_US = 30 * 60 * 1_000_000
     """,
 )
 def stateful_session_timeout_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom session windows via keyed state + EVENT-TIME TIMERS —
-    the Flink ``KeyedProcessFunction`` + ``registerEventTimeTimer``
-    pattern that built-in ``session_window`` hides.
-
-    Per user the state holds (session_start_us, last_ts_us, n). Events
-    inside the 30-min gap extend the session; a larger gap emits the
-    finished session row immediately and restarts. After each batch the
-    handler arms an event-time timeout at last_ts + gap: when the
-    watermark passes it, Spark invokes the handler with
-    ``state.hasTimedOut`` and the final session for that key is emitted
-    without any new input — which is exactly what a timer is for.
-    Sessions still open when the bounded replay ends stay unemitted
-    (watermark never passes them); the pytest therefore checks
-    emitted ⊆ batch and closed-sessions ⊆ emitted.
-    """
-
-    def session_machine(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        out = []
-        if state.hasTimedOut:
-            start, last, n = state.get
-            out.append((key[0], start, last, n))
-            state.remove()
-        else:
-            start, last, n = state.get if state.exists else (None, None, 0)
-            # One sort over the whole batch: the iterator's chunks carry
-            # no cross-chunk order guarantee. (Materialize before the
-            # emptiness test — an iterator is always truthy, so the
-            # guard must check the LIST or pd.concat([]) raises.)
-            chunks = list(pdfs)
-            whole = pd.concat(chunks) if chunks else pd.DataFrame()
-            if len(whole):
-                whole = whole.sort_values(["ts", "event_id"])
-                for ts in whole["ts"]:
-                    ts_us = int(ts.value) // 1_000
-                    if start is None:
-                        start, last, n = ts_us, ts_us, 1
-                    elif ts_us - last < _SESSION_GAP_US:
-                        last, n = ts_us, n + 1
-                    else:
-                        out.append((key[0], start, last, n))
-                        start, last, n = ts_us, ts_us, 1
-            if start is not None:
-                state.update((start, last, n))
-                # Event-time timer: fire when the watermark passes the
-                # session's gap deadline (ms granularity).
-                state.setTimeoutTimestamp((last + _SESSION_GAP_US) // 1_000)
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in out],
-                "session_start_us": [r[1] for r in out],
-                "last_ts_us": [r[2] for r in out],
-                "n_events": [r[3] for r in out],
-            }
-        )
-
+    """Custom session windows via keyed state and event-time timers
+    (:func:`compile_session_timeout_stream`). The pytest checks
+    emitted ⊆ batch and closed-sessions ⊆ emitted."""
     ev = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id")
     )
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("session_start_us", LongType()),
-            StructField("last_ts_us", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start", LongType()),
-            StructField("last", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
-    return run_keyed(
-        spark, ev, "user_id", session_machine,
-        out_schema, state_schema,
-    )
+    return run_keyed(spark, ev, "user_id", *compile_session_timeout_stream())
 
 
 #: Idle-key state TTL (Flink ``StateTtlConfig`` analogue): state not
@@ -1093,71 +1059,48 @@ def stateful_session_timeout_stream(spark: SparkSession, sf_dir: str) -> DataFra
 #: contract; TTL'd state is garbage-collected, not flushed).
 _STATE_TTL_US = 60 * 60 * 1_000_000
 
-_TTL_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("evict_at_us", LongType()),
-        StructField("last_seen_us", LongType()),
-        StructField("n_discarded", LongType()),
-    ]
-)
-_TTL_STATE_SCHEMA = StructType(
-    [
-        StructField("last", LongType()),
-        StructField("n", LongType()),
-        StructField("buf_us", ArrayType(LongType())),
-        StructField("buf_id", ArrayType(LongType())),
-    ]
-)
-
 
 def make_ttl_machine():
-    """Build the keyed TTL state machine as a CLOSURE (cloudpickle
-    ships it by value — workers never import this package; same rule
-    as stateful_count_session_stream). Factory is module-level so the
-    multi-batch pytest replays crafted micro-batches through the exact
-    shipped handler. Semantics in stateful_session_ttl_stream's
-    docstring.
+    """Handler for the keyed TTL machine. Returns ``(handler,
+    out_schema, state_schema)``; the semantics are in
+    stateful_session_ttl_stream's docstring.
 
-    Since the r12 review pass the machine uses the CEP automata's
-    watermark hold-buffer: arrivals buffer in state and fold into the
-    blob in (ts, event_id) order only once the watermark passes them.
-    The earlier form folded in arrival order (sorted per batch only),
-    so a legal in-watermark out-of-order arrival across micro-batches
-    could fabricate or suppress an eviction the globally-sorted SQL
-    oracle does not have. Eviction of the live blob is an EXPLICIT
-    watermark test (``(last + ttl) // 1000 < wm_ms``, ms-aligned —
-    the oracle's timer-path filter uses the identical expression)
-    rather than trusting the timer's own fire boundary; held events
-    can never rescue a blob past that test (a held event has
-    ``ts_ms > wm_ms``, so its gap to ``last`` already exceeds the
-    TTL — folding it later starts a fresh generation either way).
-    One API-forced 1 ms residual remains (see :func:`hold_timer_ms`):
-    when a timer must clamp to ``wm + 1`` and the FINAL watermark
-    lands exactly on the boundary, the re-check never runs — the same
-    measure-zero class as the documented ms-tie hazard."""
+    The machine runs on the watermark hold buffer: arrivals buffer in
+    state and fold into the ``(last, n)`` blob in ``(ts, event_id)``
+    order only once the watermark passes them, so an in-watermark
+    out-of-order arrival across micro-batches cannot fabricate or
+    suppress an eviction the globally sorted SQL oracle does not have.
+    Eviction of the live blob is an explicit watermark test (``(last +
+    ttl) // 1000 < wm_ms``, ms-aligned; the oracle's timer-path filter
+    uses the identical expression), not the timer's own fire boundary.
+    Held events can never rescue a blob past that test: a held event
+    has ``ts_ms > wm_ms``, so its gap to ``last`` already exceeds the
+    TTL, and folding it later starts a fresh generation either way. The
+    timer clamp leaves the 1 ms residual :func:`hold_timer_ms`
+    describes."""
     ttl_us = _STATE_TTL_US
+    out_schema = StructType(
+        [
+            StructField(c, LongType())
+            for c in ("user_id", "evict_at_us", "last_seen_us", "n_discarded")
+        ]
+    )
+    state_schema = StructType(
+        [
+            StructField("last", LongType()),
+            StructField("n", LongType()),
+            StructField("buf_us", ArrayType(LongType())),
+            StructField("buf_id", ArrayType(LongType())),
+        ]
+    )
 
-    def ttl_machine(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        out = []
-        if state.exists:
-            last, n, b_us, b_id = state.get
-            buf = [(int(u), int(i)) for u, i in zip(b_us, b_id)]
-        else:
-            last = n = 0
-            buf = []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid in zip(chunk["ts"], chunk["event_id"]):
-                    buf.append((int(ts.value) // 1_000, int(eid)))
-        ready, hold = split_by_watermark(buf, wm_ms)
-        for us, _eid in ready:
+    def process(key, st, ready, wm_ms):
+        last, n = st["last"] or 0, st["n"] or 0
+        rows = []
+        for us, _, _, _ in ready:
             if n and us - last >= ttl_us:
                 # lazy expiry on access (last_write + ttl <= now)
-                out.append((key[0], last + ttl_us, last, n))
+                rows.append((key, last + ttl_us, last, n))
                 n = 0
             if n == 0:
                 last, n = us, 1
@@ -1165,36 +1108,19 @@ def make_ttl_machine():
                 last, n = max(last, us), n + 1
         if n and (last + ttl_us) // 1000 < wm_ms:
             # idle-key GC: the watermark strictly passed the deadline
-            out.append((key[0], last + ttl_us, last, n))
+            rows.append((key, last + ttl_us, last, n))
             last = n = 0
-        if n == 0 and not hold:
-            if state.exists:
-                state.remove()
-        else:
-            # State is (last, n) only since r13: the old 'first' field
-            # was restored/persisted but never read for emission or
-            # control flow (its None-sentinel role moved to n == 0 in
-            # the r12 hold-buffer rewrite) — pure schema weight,
-            # dropped per ADVICE r12 item 3.
-            state.update(
-                (last, n, [u for u, _ in hold], [i for _, i in hold])
-            )
-            cands = []
-            if n:
-                cands.append(max((last + ttl_us) // 1_000, wm_ms + 1))
-            if hold:
-                cands.append(hold_timer_ms(hold, wm_ms))
-            state.setTimeoutTimestamp(min(cands))
-        yield pd.DataFrame(
-            {
-                "user_id": [r[0] for r in out],
-                "evict_at_us": [r[1] for r in out],
-                "last_seen_us": [r[2] for r in out],
-                "n_discarded": [r[3] for r in out],
-            }
-        )
+        if n == 0 and not st["buf"]:
+            st.clear()
+            return rows, None
+        st.update(last=last, n=n)
+        return rows, (last + ttl_us) // 1000 if n else None
 
-    return ttl_machine
+    handler = keyed_handler(
+        process, out_schema, state_schema, ("ts", "event_id", None, None), {},
+        hold=True,
+    )
+    return handler, out_schema, state_schema
 
 
 @query(
@@ -1245,7 +1171,7 @@ def make_ttl_machine():
 def stateful_session_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed-state TTL with idle-key eviction — Flink's
     ``StateTtlConfig`` (OnCreateAndWrite update type, 1h TTL) mapped
-    onto event-time timers (VERDICT r11 item 7 / ADVICE r11 item 4).
+    onto event-time timers.
 
     Per user the state is a running (last_seen, n_events) blob
     refreshed by every write. Two expiry paths, both discarding
@@ -1274,11 +1200,8 @@ def stateful_session_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     its deadline strictly passed (timer path:
     ``(last + ttl)//1000 < final_wm_ms``). A gap ≥ TTL whose proving
     successor event is still HELD at replay end evicts on neither
-    path — the r12 continuation review caught the oracle emitting
-    such generations unconditionally (``gen < maxg`` with no
-    watermark guard) while the hold-buffer handler correctly waits;
-    the oracle now applies the observability rule, and the repro is
-    pinned in tests. State still live at replay end is never emitted
+    path; the oracle applies the same observability rule, and the case
+    is pinned in tests. State still live at replay end is never emitted
     (tests/test_streaming_parity.py pins that evicted keys emit
     nothing after their TTL and that a post-eviction generation
     restarts its count from zero — the state was really dropped, not
@@ -1294,10 +1217,7 @@ def stateful_session_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id")
     )
-    return run_keyed(
-        spark, ev, "user_id", make_ttl_machine(),
-        _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA,
-    )
+    return run_keyed(spark, ev, "user_id", *make_ttl_machine())
 
 
 # The streaming CEP automaton lives in cep_stream.py since round 12:
@@ -2014,25 +1934,6 @@ def stream_rule_update_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: window_topn_stream keyed state: the per-window leaderboard —
-#: parallel (user, count) arrays, merged vectorized per micro-batch.
-_TOPN_STATE_SCHEMA = StructType(
-    [
-        StructField("users", ArrayType(LongType())),
-        StructField("counts", ArrayType(LongType())),
-    ]
-)
-
-_TOPN_OUT_SCHEMA = StructType(
-    [
-        StructField("d_start", StringType()),
-        StructField("user_id", LongType()),
-        StructField("n", LongType()),
-        StructField("rn", IntegerType()),
-    ]
-)
-
-
 @query(
     "window_topn_stream",
     oracle="""
@@ -2060,22 +1961,21 @@ def window_topn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     per day, emitted ONCE per day-window when the watermark closes it.
 
     Incremental shape: keyed state per day-window holds the running
-    per-user leaderboard (parallel (user, count) arrays, merged
-    VECTORIZED from each micro-batch's pandas chunk — no per-row
-    Python), and an event-time timer at the window end emits the
-    ranked top-2 then removes the state — exactly Flink's WindowRank
-    operator: accumulate per (window, user), fire at
+    per-user leaderboard (parallel (user, count) arrays, merged with
+    each invocation's events), and an event-time timer at the window
+    end emits the ranked top-2 then removes the state — exactly Flink's
+    WindowRank operator: accumulate per (window, user), fire at
     ``watermark >= window_end``, one emission per window. Late rows
     cannot resurrect an emitted window: a day-D row with
     ``ts_ms >= wm_ms >= end_ms(D)`` is impossible (``ts < end ≤ wm``
-    is exactly Spark's late-drop contract), so remove() is safe.
+    is exactly Spark's late-drop contract), so removing the state is
+    safe.
 
     Scale: state per key is O(distinct users in the window) — the
-    same bound Flink's WindowRank keeps — NOT O(events); counts
-    pre-reduce vectorized per batch. The keyed shuffle concentrates
-    one day per task, also Flink's layout for a PARTITION BY
-    window-only rank; with a secondary partition key (Flink's
-    ``PARTITION BY window, key``) the same handler shards by
+    same bound Flink's WindowRank keeps — NOT O(events). The keyed
+    shuffle concentrates one day per task, also Flink's layout for a
+    PARTITION BY window-only rank; with a secondary partition key
+    (Flink's ``PARTITION BY window, key``) the same handler shards by
     (window, key). The oracle is the batch key's rank SQL plus the
     ms-aligned window-closed-before-final-watermark filter
     (``end_ms <= final_wm_ms`` — the timer arms at ``end_ms − 1``,
@@ -2083,103 +1983,61 @@ def window_topn_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in windowed aggregation emits at: its twin's oracle uses
     the equivalent strict ``<`` at µs precision).
     """
+    # ``ts`` stays in the projection only to carry the watermark to the
+    # keyed operator: event-time timeouts need one.
     ev = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
         .select(F.date_trunc("day", "ts").alias("d_start"), "user_id", "ts")
     )
-    return run_topn_stream(spark, ev)
+    return run_keyed(spark, ev, "d_start", *compile_topn_stream())
 
 
 def compile_topn_stream(n: int = 2, window_ms: int = 86_400_000):
-    """Handler for the per-window top-N leaderboard (module-level so
-    the multi-batch pytest can replay a split directory through the
-    EXACT operator the registered key runs)."""
+    """Handler for the per-window top-N leaderboard over a ``(d_start,
+    user_id, ts)`` stream keyed by ``d_start``. Returns ``(handler,
+    out_schema, state_schema)``.
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        start = pd.Timestamp(key[0])
-        end_ms = start.value // 1_000_000 + window_ms
-        wm_ms = state.getCurrentWatermarkMs()
-        counts: dict[int, int] = {}
-        if state.exists:
-            users, ns = state.get
-            counts = dict(zip((int(u) for u in users), (int(c) for c in ns)))
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for uid, c in chunk.groupby("user_id").size().items():
-                    counts[int(uid)] = counts.get(int(uid), 0) + int(c)
-        if state.hasTimedOut or wm_ms >= end_ms:
-            top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
-            if state.exists:
-                state.remove()
-            yield pd.DataFrame(
-                {
-                    "d_start": [f"{start:%Y-%m-%d %H:%M:%S}"] * len(top),
-                    "user_id": [u for u, _ in top],
-                    "n": [c for _, c in top],
-                    "rn": list(range(1, len(top) + 1)),
-                }
-            )
-            return
-        state.update(
-            ([u for u in counts], [counts[u] for u in counts])
-        )
-        # Same API-forced 1 ms residual as hold_timer_ms (ADVICE r12
-        # item 1): when the clamp engages (end_ms - 1 <= wm_ms) the
-        # timer arms at wm_ms + 1 and fires only once the watermark
-        # strictly passes it — a FINAL watermark landing exactly on
-        # the armed instant never fires it. Needs an exact-ms
-        # coincidence between max(ts) − delay and the window end; any
-        # later data for the key heals it (the wm_ms >= end_ms branch
-        # above emits on the data path).
-        state.setTimeoutTimestamp(max(end_ms - 1, wm_ms + 1))
-        yield pd.DataFrame(
-            {"d_start": [], "user_id": [], "n": [], "rn": []}
-        )
-
-    return handler
-
-
-def run_topn_stream(spark: SparkSession, ev: DataFrame) -> DataFrame:
-    """Keyed top-N operator over a prepared (d_start, user_id, ts)
-    stream (``ts`` stays in the projection solely to carry the
-    watermark attribute to the stateful operator — dropping it raises
-    "Event-time timeout not supported without watermark")."""
-    return run_keyed(
-        spark, ev, "d_start", compile_topn_stream(),
-        _TOPN_OUT_SCHEMA, _TOPN_STATE_SCHEMA,
+    Each invocation adds its events to the window's per-user counts.
+    Once the watermark reaches the window end (``wm_ms >= end_ms``) the
+    step emits the top ``n`` users by count, ties broken by user_id
+    ascending, and removes the state; until then it asks to run again at
+    ``end_ms − 1``. When the runtime's ``wm_ms + 1`` clamp engages, the
+    timer keeps the 1 ms residual :func:`hold_timer_ms` describes; any
+    later data for the window heals it, since the data path tests the
+    watermark too."""
+    out_schema = StructType(
+        [
+            StructField("d_start", StringType()),
+            StructField("user_id", LongType()),
+            StructField("n", LongType()),
+            StructField("rn", IntegerType()),
+        ]
+    )
+    state_schema = StructType(
+        [
+            StructField("users", ArrayType(LongType())),
+            StructField("counts", ArrayType(LongType())),
+        ]
     )
 
+    def process(key, st, events, wm_ms):
+        start = pd.Timestamp(key)
+        end_ms = start.value // 1_000_000 + window_ms
+        counts = Counter(dict(zip(st["users"] or (), st["counts"] or ())))
+        counts.update(e[1] for e in events)
+        if wm_ms < end_ms:
+            st.update(users=list(counts), counts=list(counts.values()))
+            return [], end_ms - 1
+        st.clear()
+        top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
+        d_start = f"{start:%Y-%m-%d %H:%M:%S}"
+        return [(d_start, u, c, r) for r, (u, c) in enumerate(top, 1)], None
 
-#: window_count_tumbling_stream keyed state: the open window's
-#: accumulators plus the watermark buffer (events not yet folded, in
-#: arrival order; folded into event-time order once the watermark
-#: passes them — same rule as the CEP automata).
-_COUNTWIN_STATE_SCHEMA = StructType(
-    [
-        StructField("next_idx", LongType()),
-        StructField("cnt", LongType()),
-        StructField("min_id", LongType()),
-        StructField("max_id", LongType()),
-        StructField("sum_val", DoubleType()),
-        StructField("buf_us", ArrayType(LongType())),
-        StructField("buf_id", ArrayType(LongType())),
-        StructField("buf_val", ArrayType(DoubleType())),
-    ]
-)
-
-_COUNTWIN_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("window_idx", LongType()),
-        StructField("n", LongType()),
-        StructField("first_event", LongType()),
-        StructField("last_event", LongType()),
-        StructField("sum_value", DoubleType()),
-    ]
-)
+    handler = keyed_handler(
+        process, out_schema, state_schema, ("ts", "user_id", None, None), {}
+    )
+    return handler, out_schema, state_schema
 
 
 def compile_countwindow_stream(size: int = 5):
@@ -2187,102 +2045,76 @@ def compile_countwindow_stream(size: int = 5):
     per key, every ``size`` consecutive events in event-time order
     form one window, emitted the moment its completing event FOLDS
     (i.e. once the watermark passes it — count windows depend on the
-    per-key event ORDER, so arrivals buffer until the watermark
-    proves their position is final, exactly the CEP automata's rule).
-    Partial windows never fire — Flink's countWindow contract — so
-    the bounded-replay tail stays in state and the oracle filter is
-    ``COUNT(*) = size AND last-event-ms <= final_wm_ms``."""
-    nan = float("nan")
+    per-key event ORDER, so arrivals wait in the hold buffer until the
+    watermark proves their position is final). Partial windows never
+    fire — Flink's countWindow contract — so the bounded-replay tail
+    stays in state and the oracle filter is ``COUNT(*) = size AND
+    last-event-ms <= final_wm_ms``. Returns ``(handler, out_schema,
+    state_schema)``; the state is the open window's accumulators plus
+    the hold buffer."""
+    out_schema = StructType(
+        [
+            StructField("user_id", LongType()),
+            StructField("window_idx", LongType()),
+            StructField("n", LongType()),
+            StructField("first_event", LongType()),
+            StructField("last_event", LongType()),
+            StructField("sum_value", DoubleType()),
+        ]
+    )
+    state_schema = StructType(
+        [
+            StructField("next_idx", LongType()),
+            StructField("cnt", LongType()),
+            StructField("min_id", LongType()),
+            StructField("max_id", LongType()),
+            StructField("sum_val", DoubleType()),
+            StructField("buf_us", ArrayType(LongType())),
+            StructField("buf_id", ArrayType(LongType())),
+            StructField("buf_val", ArrayType(DoubleType())),
+        ]
+    )
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            next_idx, cnt, min_id, max_id, sum_val, b_us, b_id, b_val = (
-                state.get
-            )
-            buf = [
-                (int(u), int(i), None if v != v else float(v))
-                for u, i, v in zip(b_us, b_id, b_val)
-            ]
-            sum_val = None if sum_val != sum_val else float(sum_val)
-        else:
-            next_idx = cnt = 0
-            min_id = max_id = 0
-            sum_val = None
-            buf = []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, val in zip(
-                    chunk["ts"], chunk["event_id"], chunk["value"]
-                ):
-                    buf.append(
-                        (
-                            int(ts.value) // 1_000,
-                            int(eid),
-                            None if pd.isna(val) else float(val),
-                        )
-                    )
-        ready, hold = split_by_watermark(buf, wm_ms)
-        out = []
-        for _us_, eid, val in ready:
+    def process(key, st, ready, wm_ms):
+        next_idx, cnt = st["next_idx"] or 0, st["cnt"] or 0
+        min_id, max_id = st["min_id"] or 0, st["max_id"] or 0
+        sum_val = st["sum_val"]
+        rows = []
+        for _, eid, _, val in ready:
             cnt += 1
             min_id = eid if cnt == 1 else min(min_id, eid)
             max_id = eid if cnt == 1 else max(max_id, eid)
             if val is not None:
                 sum_val = val if sum_val is None else sum_val + val
             if cnt == size:
-                out.append(
+                rows.append(
                     (
-                        key[0],
-                        next_idx,
-                        cnt,
-                        min_id,
-                        max_id,
+                        key, next_idx, cnt, min_id, max_id,
                         None if sum_val is None else round(sum_val, 4),
                     )
                 )
                 next_idx += 1
                 cnt = 0
                 sum_val = None
-        if cnt == 0 and not hold and next_idx == 0:
-            # Nothing folded and nothing numbered: mirror the TTL
-            # machine's exhausted-state removal (ADVICE r12 item 4)
-            # rather than persisting an all-zero row forever. A key
-            # with next_idx > 0 must KEEP its row even when the buffer
-            # drains: next_idx is live state — window numbering
-            # continues from it, so removing would restart a future
-            # window at idx 0 (Flink's countWindow likewise keeps the
-            # per-key count state for the stream's lifetime; bounding
-            # it is a TTL layering, which renumbers by design).
-            if state.exists:
-                state.remove()
-        else:
-            state.update(
-                (
-                    next_idx,
-                    cnt,
-                    min_id,
-                    max_id,
-                    nan if sum_val is None else sum_val,
-                    [e[0] for e in hold],
-                    [e[1] for e in hold],
-                    [nan if e[2] is None else e[2] for e in hold],
-                )
-            )
-        if hold:
-            state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        yield pd.DataFrame(
-            {
-                c: [r[i] for r in out]
-                for i, c in enumerate(
-                    [f.name for f in _COUNTWIN_OUT_SCHEMA.fields]
-                )
-            }
+        if cnt == 0 and next_idx == 0 and not st["buf"]:
+            # Nothing folded and nothing numbered: no all-zero row.
+            # A key with next_idx > 0 keeps its row even when the
+            # buffer drains, because window numbering continues from
+            # it (Flink's countWindow likewise keeps the per-key count
+            # for the stream's lifetime).
+            st.clear()
+            return rows, None
+        st.update(
+            next_idx=next_idx, cnt=cnt, min_id=min_id, max_id=max_id,
+            sum_val=sum_val,
         )
+        return rows, None
 
-    return handler
+    handler = keyed_handler(
+        process, out_schema, state_schema, ("ts", "event_id", None, "value"),
+        {}, hold=True,
+    )
+    return handler, out_schema, state_schema
 
 
 @query(
@@ -2334,33 +2166,7 @@ def window_count_tumbling_stream(
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id", "value")
     )
-    return run_keyed(
-        spark, ev, "user_id", compile_countwindow_stream(),
-        _COUNTWIN_OUT_SCHEMA, _COUNTWIN_STATE_SCHEMA,
-    )
-
-
-#: window_count_sliding_stream keyed state: folded-event position,
-#: the ring of the last <= size folded values (NaN-encoded NULLs),
-#: and the watermark hold buffer.
-_COUNTSLIDE_STATE_SCHEMA = StructType(
-    [
-        StructField("pos", LongType()),
-        StructField("ring", ArrayType(DoubleType())),
-        StructField("buf_us", ArrayType(LongType())),
-        StructField("buf_id", ArrayType(LongType())),
-        StructField("buf_val", ArrayType(DoubleType())),
-    ]
-)
-
-_COUNTSLIDE_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("window_idx", LongType()),
-        StructField("n", LongType()),
-        StructField("sum_value", DoubleType()),
-    ]
-)
+    return run_keyed(spark, ev, "user_id", *compile_countwindow_stream())
 
 
 def compile_countwindow_sliding_stream(size: int = 6, slide: int = 2):
@@ -2375,81 +2181,56 @@ def compile_countwindow_sliding_stream(size: int = 6, slide: int = 2):
     only complete windows emit and the oracle filter is
     ``COUNT(*) = size AND last-event-ms <= final_wm_ms``.
 
-    State: the ring of the last ≤ size folded VALUES plus the fold
+    Returns ``(handler, out_schema, state_schema)``. The state is the
+    ring of the last ≤ size folded VALUES (NULLs kept) plus the fold
     position — O(size) per key, Flink's CountEvictor bound — and the
-    watermark hold buffer (round 13 — VERDICT r12 directive 6; the
-    one windows.py batch key that lacked a stream twin)."""
-    nan = float("nan")
+    watermark hold buffer."""
+    out_schema = StructType(
+        [
+            StructField("user_id", LongType()),
+            StructField("window_idx", LongType()),
+            StructField("n", LongType()),
+            StructField("sum_value", DoubleType()),
+        ]
+    )
+    state_schema = StructType(
+        [
+            StructField("pos", LongType()),
+            StructField("ring", ArrayType(DoubleType())),
+            StructField("buf_us", ArrayType(LongType())),
+            StructField("buf_id", ArrayType(LongType())),
+            StructField("buf_val", ArrayType(DoubleType())),
+        ]
+    )
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            pos, ring_raw, b_us, b_id, b_val = state.get
-            pos = int(pos)
-            ring = [None if v != v else float(v) for v in ring_raw]
-            buf = [
-                (int(u), int(i), None if v != v else float(v))
-                for u, i, v in zip(b_us, b_id, b_val)
-            ]
-        else:
-            pos, ring, buf = 0, [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, val in zip(
-                    chunk["ts"], chunk["event_id"], chunk["value"]
-                ):
-                    buf.append(
-                        (
-                            int(ts.value) // 1_000,
-                            int(eid),
-                            None if pd.isna(val) else float(val),
-                        )
-                    )
-        ready, hold = split_by_watermark(buf, wm_ms)
-        out = []
-        for _us_, _eid, val in ready:
+    def process(key, st, ready, wm_ms):
+        pos, ring = st["pos"] or 0, st["ring"] or []
+        rows = []
+        for _, _, _, val in ready:
             ring.append(val)
             del ring[: max(0, len(ring) - size)]
             pos += 1
             if pos >= size and (pos - size) % slide == 0:
                 vals = [v for v in ring if v is not None]
-                out.append(
+                rows.append(
                     (
-                        key[0],
-                        (pos - size) // slide,
-                        size,
+                        key, (pos - size) // slide, size,
                         round(sum(vals), 4) if vals else None,
                     )
                 )
-        if pos == 0 and not hold:
+        if pos == 0 and not st["buf"]:
             # nothing folded and nothing numbered (the count-tumbling
             # rule): don't persist an empty row
-            if state.exists:
-                state.remove()
-        else:
-            state.update(
-                (
-                    pos,
-                    [nan if v is None else v for v in ring],
-                    [e[0] for e in hold],
-                    [e[1] for e in hold],
-                    [nan if e[2] is None else e[2] for e in hold],
-                )
-            )
-        if hold:
-            state.setTimeoutTimestamp(hold_timer_ms(hold, wm_ms))
-        yield pd.DataFrame(
-            {
-                c: [r[i] for r in out]
-                for i, c in enumerate(
-                    [f.name for f in _COUNTSLIDE_OUT_SCHEMA.fields]
-                )
-            }
-        )
+            st.clear()
+            return rows, None
+        st.update(pos=pos, ring=ring)
+        return rows, None
 
-    return handler
+    handler = keyed_handler(
+        process, out_schema, state_schema, ("ts", "event_id", None, "value"),
+        {}, hold=True,
+    )
+    return handler, out_schema, state_schema
 
 
 @query(
@@ -2507,8 +2288,7 @@ def window_count_sliding_stream(
         .select("user_id", "ts", "event_id", "value")
     )
     return run_keyed(
-        spark, ev, "user_id", compile_countwindow_sliding_stream(),
-        _COUNTSLIDE_OUT_SCHEMA, _COUNTSLIDE_STATE_SCHEMA,
+        spark, ev, "user_id", *compile_countwindow_sliding_stream()
     )
 
 
@@ -2595,120 +2375,76 @@ def window_session_dynamic_gap_stream(
     return run_to_memory(spark, agg, mode="append")
 
 
-#: join_asof_stream keyed state: the settled side compressed to ONE
-#: (ts, id) version plus the in-watermark click buffer and the
-#: pending errors — Flink's temporal-join state exactly (latest
-#: version + in-flight buffer). -1 sentinels = "no settled click".
-_ASOF_STATE_SCHEMA = StructType(
-    [
-        StructField("best_old_us", LongType()),
-        StructField("best_old_id", LongType()),
-        StructField("click_us", ArrayType(LongType())),
-        StructField("click_id", ArrayType(LongType())),
-        StructField("err_us", ArrayType(LongType())),
-        StructField("err_id", ArrayType(LongType())),
-    ]
-)
-
-_ASOF_OUT_SCHEMA = StructType(
-    [
-        StructField("error_id", LongType()),
-        StructField("click_id", LongType()),
-    ]
-)
-
-
 def compile_asof_stream():
     """Handler for the streaming as-of join (each error paired with
-    the nearest prior-or-equal click of its key).
+    the nearest prior-or-equal click of its key). Returns ``(handler,
+    out_schema, state_schema)``.
 
     Resolution rule: an error settles once ``e_ms < wm_ms`` (STRICT) —
     any not-yet-arrived click has ``c_ms >= wm_ms > e_ms``, hence
     ``c_us >= wm_ms·1000 > e_us`` — strictly after the error, so the
-    match set is complete. Click-buffer compression: once the
-    watermark passes a click, only the MAX (ts, id) among passed
-    clicks can ever win for a future or pending error (both have
-    ``ts_us >= wm_ms·1000``), so the settled side collapses to one
-    version — the temporal-join state bound.
+    match set is complete. An error with no prior click emits a NULL
+    ``click_id``. Click-buffer compression: once the watermark passes a
+    click, only the MAX (ts, id) among passed clicks can ever win for a
+    future or pending error (both have ``ts_us >= wm_ms·1000``), so the
+    settled side collapses to one version — Flink's temporal-join state
+    (latest version + in-flight buffer). The state is that version
+    (``best_old_*``, -1 when there is none), the in-watermark
+    ``click`` buffer and the pending ``err`` buffer.
 
-    Per-invocation cost (ADVICE r12 item 2): the click buffer sorts
-    ONCE per invocation and each settling error resolves by bisect —
-    O((C + E)·log C) instead of the earlier O(E·C) full scan per
-    error, so a key-skewed watermark-delay backlog degrades
-    log-linearly, not quadratically."""
+    Per-invocation cost: the click buffer sorts once and each settling
+    error resolves by bisect — O((C + E)·log C), so a key-skewed
+    watermark-delay backlog degrades log-linearly, not
+    quadratically."""
+    out_schema = StructType(
+        [
+            StructField("error_id", LongType()),
+            StructField("click_id", LongType()),
+        ]
+    )
+    state_schema = StructType(
+        [
+            StructField("best_old_us", LongType()),
+            StructField("best_old_id", LongType()),
+            StructField("click_us", ArrayType(LongType())),
+            StructField("click_id", ArrayType(LongType())),
+            StructField("err_us", ArrayType(LongType())),
+            StructField("err_id", ArrayType(LongType())),
+        ]
+    )
 
-    def handler(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bo_us, bo_id, c_us, c_id, e_us, e_id = state.get
-            best = (int(bo_us), int(bo_id)) if int(bo_us) >= 0 else None
-            clicks = [(int(u), int(i)) for u, i in zip(c_us, c_id)]
-            errors = [(int(u), int(i)) for u, i in zip(e_us, e_id)]
-        else:
-            best, clicks, errors = None, [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        if not state.hasTimedOut:
-            for chunk in pdfs:
-                for ts, eid, cls in zip(
-                    chunk["ts"], chunk["event_id"], chunk["event_type"]
-                ):
-                    us = int(ts.value) // 1_000
-                    if cls == "click":
-                        clicks.append((us, int(eid)))
-                    else:
-                        errors.append((us, int(eid)))
-        out, pending = [], []
-        clicks.sort()  # (us, id) asc — prefix max is the last element
-        # parallel key list for the bisect probes: bisect's key=
-        # parameter needs Python >= 3.10, and the other handlers
-        # already bisect over plain lists (ADVICE r13 item 3) —
-        # keep the module interpreter-portable the same way
-        click_us = [c[0] for c in clicks]
+    def process(key, st, events, wm_ms):
+        bo = st["best_old_us"]
+        best = None if bo is None or bo < 0 else (bo, st["best_old_id"])
+        clicks, errors = st["click"], st["err"]
+        for us, eid, cls, _ in events:
+            (clicks if cls == "click" else errors).append((us, eid))
+        clicks.sort()
+        rows, pending = [], []
         for us, eid in errors:
             if us // 1000 < wm_ms:
-                # max (ts, id) click with ts <= error ts: bisect for
-                # the prefix boundary; the sorted prefix's last
-                # element IS its max tuple
-                idx = bisect.bisect_right(click_us, us)
-                m = clicks[idx - 1] if idx else None
+                # the max (ts, id) click with ts <= the error's is the
+                # last one of the sorted prefix
+                i = bisect.bisect_left(clicks, (us + 1,))
+                m = clicks[i - 1] if i else None
                 if best is not None and (m is None or best > m):
                     m = best
-                out.append((eid, None if m is None else m[1]))
+                rows.append((eid, None if m is None else m[1]))
             else:
                 pending.append((us, eid))
-        floor_us = wm_ms * 1000
-        settled = [c for c in clicks if c[0] < floor_us]
-        if settled:
-            top = max(settled)
-            best = top if best is None else max(best, top)
-        clicks = [c for c in clicks if c[0] >= floor_us]
-        state.update(
-            (
-                -1 if best is None else best[0],
-                -1 if best is None else best[1],
-                [u for u, _ in clicks],
-                [i for _, i in clicks],
-                [u for u, _ in pending],
-                [i for _, i in pending],
-            )
-        )
-        if pending:
-            # shares hold_timer_ms's API-forced clamp residual (the
-            # wm_ms + 1 floor) — see its docstring for the boundary
-            state.setTimeoutTimestamp(
-                max(min(u for u, _ in pending) // 1000, wm_ms + 1)
-            )
-        yield pd.DataFrame(
-            {
-                "error_id": [r[0] for r in out],
-                "click_id": pd.array(
-                    [r[1] for r in out], dtype="Int64"
-                ),
-            }
-        )
+        i = bisect.bisect_left(clicks, (wm_ms * 1000,))
+        if i and (best is None or clicks[i - 1] > best):
+            best = clicks[i - 1]
+        st["best_old_us"], st["best_old_id"] = best or (-1, -1)
+        st["click"], st["err"] = clicks[i:], pending
+        return rows, min(pending)[0] // 1000 if pending else None
 
-    return handler
+    handler = keyed_handler(
+        process, out_schema, state_schema,
+        ("ts", "event_id", "event_type", None),
+        {"click": ("us", "id"), "err": ("us", "id")},
+    )
+    return handler, out_schema, state_schema
 
 
 @query(
@@ -2756,7 +2492,7 @@ def join_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return run_keyed(
         spark, _class_events(spark, sf_dir, "click", "error"), "user_id",
-        compile_asof_stream(), _ASOF_OUT_SCHEMA, _ASOF_STATE_SCHEMA,
+        *compile_asof_stream(),
     )
 
 

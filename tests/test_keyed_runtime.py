@@ -1,11 +1,15 @@
 """Unit tests for the keyed-state runtime in streaming/streams.py: the
-input decode (ingest_chunk), the state codec behind keyed_handler, and
-the handler's hold buffer, timer clamp and state removal. Pure Python —
-the handler is driven through a minimal GroupState stand-in."""
+input decode (ingest_chunk), the state codec behind keyed_handler, the
+handler's hold buffer, timer clamp and state removal, and the source
+pin that keeps run_keyed the package's only stateful launch. Pure
+Python — handlers are driven through a minimal GroupState stand-in."""
 
 from __future__ import annotations
 
+import inspect
 import math
+import pathlib
+import re
 
 import pandas as pd
 from pyspark.sql.types import (
@@ -17,10 +21,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
+import flink_large_window_spark
 from flink_large_window_spark.streaming.streams import (
     _state_codec,
+    compile_count_session_stream,
     ingest_chunk,
     keyed_handler,
+    run_keyed,
 )
 
 
@@ -187,3 +194,57 @@ def test_keyed_handler_holds_folds_in_order_and_clamps_timers():
     assert seen[-1] == [4, 1]
     assert out[0].to_dict("list") == {"k": [7, 7], "id": [4, 1]}
     assert st2.value is None and st2.timeout is None
+
+
+def test_count_session_folds_in_event_time_order_across_chunks():
+    """One invocation, two Arrow chunks: the second chunk holds a
+    signup earlier than every event of the first. The counts must
+    follow (ts, event_id) order over both chunks, not chunk order."""
+    handler, _, _ = compile_count_session_stream()
+
+    def chunk(rows):
+        return pd.DataFrame(
+            {
+                "user_id": [7] * len(rows),
+                "ts": pd.to_datetime([r[0] for r in rows], unit="m"),
+                "event_id": [r[1] for r in rows],
+                "event_type": [r[2] for r in rows],
+            }
+        )
+
+    st = _State(None, 0)
+    out = pd.concat(handler(
+        (7,),
+        iter([chunk([(10, 1, "view"), (20, 2, "click")]),
+              chunk([(5, 3, "signup"), (30, 4, "view")])]),
+        st,
+    ))
+    got = dict(zip(out["event_id"], out["n_since_signup"]))
+    assert got == {3: 1, 1: 2, 2: 3, 4: 4}, got
+    assert set(out["user_id"]) == {7}
+    assert st.value == (1, 4) and st.timeout is None
+    # the counter carries into the next invocation
+    out = pd.concat(handler((7,), iter([chunk([(40, 5, "view")])]), st))
+    assert out.to_dict("list") == {
+        "user_id": [7], "event_id": [5], "n_since_signup": [5],
+    }
+    assert st.value == (1, 5)
+
+
+def test_run_keyed_is_the_only_launch_and_no_row_unboxing_is_left():
+    pkg = pathlib.Path(flink_large_window_spark.__file__).parent
+    launches = {
+        str(p.relative_to(pkg)): p.read_text().count("applyInPandasWithState(")
+        for p in pkg.rglob("*.py")
+    }
+    assert {p: n for p, n in launches.items() if n} == {
+        "streaming/streams.py": 1
+    }
+    assert "applyInPandasWithState(" in inspect.getsource(run_keyed)
+    unboxing = [
+        f"{p.name}:{i}"
+        for p in (pkg / "streaming").rglob("*.py")
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if re.search(r"\bts\.value\b", line)
+    ]
+    assert not unboxing, unboxing

@@ -19,6 +19,7 @@ _CEP_STREAM_KEYS = sorted(
 )
 
 _KEYED_STREAMS_KEYS = [
+    "stateful_count_session_stream",
     "stateful_session_timeout_stream",
     "stateful_session_ttl_stream",
     "window_topn_stream",

@@ -1144,8 +1144,6 @@ def test_state_ttl_evicts_idle_keys(spark, tmp_path):
     live at replay end and must NOT emit.
     """
     from flink_large_window_spark.streaming.streams import (
-        _TTL_OUT_SCHEMA,
-        _TTL_STATE_SCHEMA,
         make_ttl_machine,
         run_keyed,
     )
@@ -1174,10 +1172,7 @@ def test_state_ttl_evicts_idle_keys(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    out = run_keyed(
-        spark, ev, "user_id", make_ttl_machine(),
-        _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA,
-    )
+    out = run_keyed(spark, ev, "user_id", *make_ttl_machine())
     got = {
         (r["user_id"], r["evict_at_us"], r["last_seen_us"], r["n_discarded"])
         for r in out.collect()
@@ -1203,6 +1198,60 @@ def test_state_ttl_evicts_idle_keys(spark, tmp_path):
     assert got == expected, (
         f"extra: {sorted(got - expected)} missing: {sorted(expected - got)}"
     )
+
+
+def test_session_timeout_stream_timer_and_data_close_across_batches(
+    spark, tmp_path
+):
+    """Session timeouts across micro-batches (t0 = 2024-03-01 12:00):
+
+    - batch 1: user 1 at t0, t0+10m (deadline t0+40m); user 2 at t0,
+      t0+5m.
+    - batch 2: no user-1 event. User 2 at t0+60m, a 55-min gap, closes
+      user 2's first session on data; user 3 at t0+100m moves the
+      watermark to t0+90m, past user 1's deadline, so user 1's session
+      can only be emitted by its timer.
+
+    User 2's second session ends at exactly the final watermark
+    (t0+60m + 30m = t0+90m): not strictly passed, so it stays open, as
+    does user 3's."""
+    from flink_large_window_spark.streaming.streams import (
+        compile_session_timeout_stream,
+        run_keyed,
+    )
+
+    d = _write_batches(
+        tmp_path,
+        [
+            _event_row(1, 0, 0, "view"),
+            _event_row(1, 10, 1, "click"),
+            _event_row(2, 0, 2, "view"),
+            _event_row(2, 5, 3, "view"),
+        ],
+        [_event_row(2, 60, 4, "view"), _event_row(3, 100, 5, "view")],
+    )
+    stream = (
+        spark.readStream.schema(
+            "user_id long, ts timestamp, event_id long, event_type string"
+        )
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "part_*.parquet")
+        .parquet(d)
+    )
+    ev = stream.withWatermark("ts", "10 minutes").select(
+        "user_id", "ts", "event_id"
+    )
+    out = run_keyed(spark, ev, "user_id", *compile_session_timeout_stream())
+    got = sorted(
+        (r["user_id"], r["session_start_us"], r["last_ts_us"], r["n_events"])
+        for r in out.collect()
+    )
+    t0_us = _us("2024-03-01 12:00:00")
+    m = 60 * 1_000_000
+    assert got == [
+        (1, t0_us, t0_us + 10 * m, 2),  # timer path, no user-1 input
+        (2, t0_us, t0_us + 5 * m, 2),  # closed on data by the gap
+    ], got
 
 
 def test_afterskip_stream_enumerates_submatches_across_batches(
@@ -1845,8 +1894,6 @@ def test_countwindow_sliding_stream_multibatch(spark, tmp_path):
     values are sum-skipped, and window 0 — complete — emits while the
     open tail (positions 8+) stays in state."""
     from flink_large_window_spark.streaming.streams import (
-        _COUNTSLIDE_OUT_SCHEMA,
-        _COUNTSLIDE_STATE_SCHEMA,
         compile_countwindow_sliding_stream,
         run_keyed,
     )
@@ -1872,8 +1919,7 @@ def test_countwindow_sliding_stream_multibatch(spark, tmp_path):
         "user_id", "ts", "event_id", "value"
     )
     out = run_keyed(
-        spark, ev, "user_id", compile_countwindow_sliding_stream(),
-        _COUNTSLIDE_OUT_SCHEMA, _COUNTSLIDE_STATE_SCHEMA,
+        spark, ev, "user_id", *compile_countwindow_sliding_stream()
     )
     got = {
         (r["user_id"], r["window_idx"], r["n"], r["sum_value"])
@@ -2059,7 +2105,8 @@ def test_window_topn_stream_multibatch(spark, max_ts, tmp_path):
 
     from flink_large_window_spark.registry import REGISTRY
     from flink_large_window_spark.streaming.streams import (
-        run_topn_stream,
+        compile_topn_stream,
+        run_keyed,
     )
 
     src = os.path.join(SF_SMOKE, "events.parquet")
@@ -2092,7 +2139,7 @@ def test_window_topn_stream_multibatch(spark, max_ts, tmp_path):
         stream.withWatermark("ts", "10 minutes")
         .select(F.date_trunc("day", "ts").alias("d_start"), "user_id", "ts")
     )
-    out = run_topn_stream(spark, ev)
+    out = run_keyed(spark, ev, "d_start", *compile_topn_stream())
     got = {
         (r["d_start"], r["user_id"], r["n"], r["rn"]) for r in out.collect()
     }
@@ -2122,8 +2169,6 @@ def _run_countwin_split_stream(spark, d):
     the count-window automaton — the same pipeline
     window_count_tumbling_stream builds, pointed at a split dir."""
     from flink_large_window_spark.streaming.streams import (
-        _COUNTWIN_OUT_SCHEMA,
-        _COUNTWIN_STATE_SCHEMA,
         compile_countwindow_stream,
         run_keyed,
     )
@@ -2140,10 +2185,7 @@ def _run_countwin_split_stream(spark, d):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
-    return run_keyed(
-        spark, ev, "user_id", compile_countwindow_stream(),
-        _COUNTWIN_OUT_SCHEMA, _COUNTWIN_STATE_SCHEMA,
-    )
+    return run_keyed(spark, ev, "user_id", *compile_countwindow_stream())
 
 
 def test_countwindow_stream_multibatch_and_order(spark, tmp_path):
@@ -2294,8 +2336,6 @@ def _run_asof_split_stream(spark, d):
     the temporal-join automaton — the same pipeline join_asof_stream
     builds, pointed at a split directory."""
     from flink_large_window_spark.streaming.streams import (
-        _ASOF_OUT_SCHEMA,
-        _ASOF_STATE_SCHEMA,
         compile_asof_stream,
         run_keyed,
     )
@@ -2312,10 +2352,7 @@ def _run_asof_split_stream(spark, d):
         .select("user_id", "ts", "event_id", "event_type")
         .withWatermark("ts", "10 minutes")
     )
-    return run_keyed(
-        spark, ev, "user_id", compile_asof_stream(),
-        _ASOF_OUT_SCHEMA, _ASOF_STATE_SCHEMA,
-    )
+    return run_keyed(spark, ev, "user_id", *compile_asof_stream())
 
 
 def test_asof_stream_multibatch(spark, tmp_path):
@@ -2507,8 +2544,6 @@ def test_ttl_out_of_order_within_watermark_does_not_fabricate_eviction(
     must produce exactly that; the pre-review handler emitted a
     fabricated (+0m, n=1) eviction plus a wrong n=2 final blob."""
     from flink_large_window_spark.streaming.streams import (
-        _TTL_OUT_SCHEMA,
-        _TTL_STATE_SCHEMA,
         make_ttl_machine,
         run_keyed,
     )
@@ -2532,10 +2567,7 @@ def test_ttl_out_of_order_within_watermark_does_not_fabricate_eviction(
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    out = run_keyed(
-        spark, ev, "user_id", make_ttl_machine(),
-        _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA,
-    )
+    out = run_keyed(spark, ev, "user_id", *make_ttl_machine())
     got = {
         (r["user_id"], r["evict_at_us"], r["last_seen_us"], r["n_discarded"])
         for r in out.collect()
@@ -2563,10 +2595,8 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from flink_large_window_spark.streaming.streams import (
-        _COUNTWIN_OUT_SCHEMA,
-        _COUNTWIN_STATE_SCHEMA,
         compile_countwindow_stream,
-        run_topn_stream,
+        compile_topn_stream,
         run_keyed,
     )
 
@@ -2622,7 +2652,7 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
         stream.withWatermark("ts", "10 minutes")
         .select(F.date_trunc("day", "ts").alias("d_start"), "user_id", "ts")
     )
-    topn = run_topn_stream(spark, ev)
+    topn = run_keyed(spark, ev, "d_start", *compile_topn_stream())
     got = {
         (r["d_start"], r["user_id"], r["n"], r["rn"])
         for r in topn.collect()
@@ -2644,10 +2674,7 @@ def test_topn_stream_tiebreak_and_countwin_null_values(spark, tmp_path):
     ev2 = stream2.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id", "value"
     )
-    out = run_keyed(
-        spark, ev2, "user_id", compile_countwindow_stream(),
-        _COUNTWIN_OUT_SCHEMA, _COUNTWIN_STATE_SCHEMA,
-    )
+    out = run_keyed(spark, ev2, "user_id", *compile_countwindow_stream())
     cw_got = {
         (r["user_id"], r["window_idx"], r["sum_value"])
         for r in out.collect()
@@ -2684,8 +2711,6 @@ def test_ttl_held_successor_does_not_evict(spark, tmp_path):
     the successor stays inside the final tail and neither path is
     observable, is test_ttl_held_successor_tail_case.)"""
     from flink_large_window_spark.streaming.streams import (
-        _TTL_OUT_SCHEMA,
-        _TTL_STATE_SCHEMA,
         make_ttl_machine,
         run_keyed,
     )
@@ -2713,10 +2738,7 @@ def test_ttl_held_successor_does_not_evict(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    out = run_keyed(
-        spark, ev, "user_id", make_ttl_machine(),
-        _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA,
-    )
+    out = run_keyed(spark, ev, "user_id", *make_ttl_machine())
     got = {
         (r["user_id"], r["evict_at_us"], r["last_seen_us"], r["n_discarded"])
         for r in out.collect()
@@ -2744,8 +2766,6 @@ def test_ttl_held_successor_tail_case(spark, tmp_path):
     import duckdb
 
     from flink_large_window_spark.streaming.streams import (
-        _TTL_OUT_SCHEMA,
-        _TTL_STATE_SCHEMA,
         make_ttl_machine,
         run_keyed,
     )
@@ -2771,10 +2791,7 @@ def test_ttl_held_successor_tail_case(spark, tmp_path):
     ev = stream.withWatermark("ts", "10 minutes").select(
         "user_id", "ts", "event_id"
     )
-    out = run_keyed(
-        spark, ev, "user_id", make_ttl_machine(),
-        _TTL_OUT_SCHEMA, _TTL_STATE_SCHEMA,
-    )
+    out = run_keyed(spark, ev, "user_id", *make_ttl_machine())
     assert out.count() == 0, out.collect()
     # and the ORACLE on the same events agrees (this is the cell the
     # pre-fix oracle got wrong)
